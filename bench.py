@@ -32,6 +32,16 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+#: The operator suite, in run order.
+QUERY_NAMES = [
+    "cdc_latest_wins", "q1_pricing_summary", "q3_shipping_priority",
+    "q5_revenue_by_nation", "window_top_orders", "text_profile",
+    "dedup_exact", "dedup_minhash_lsh", "dedup_clusters",
+    "dedup_token_jaccard", "dedup_simhash", "ann_cosine_topk", "ann_ivf_topk",
+    "dedup_embedding_cosine", "text_wordcount_top",
+]
+
+
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
 
@@ -199,13 +209,7 @@ def main():
         extra.update(info)
 
     qs = entrymod.queries()
-    for name in [
-        "cdc_latest_wins", "q1_pricing_summary", "q3_shipping_priority",
-        "q5_revenue_by_nation", "window_top_orders", "text_profile",
-        "dedup_exact", "dedup_minhash_lsh", "dedup_clusters",
-        "dedup_token_jaccard", "dedup_simhash", "ann_cosine_topk", "ann_ivf_topk",
-        "dedup_embedding_cosine", "text_wordcount_top",
-    ]:
+    for name in QUERY_NAMES:
         run(name, lambda n=name: qs[n](spark, sf_dir).write.format("noop").mode("overwrite").save())
 
     total = round(sum(timings.values()), 2)

@@ -21,15 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import build_spark  # noqa: E402  (same session config as the contract)
-
-QUERY_NAMES = [
-    "cdc_latest_wins", "q1_pricing_summary", "q3_shipping_priority",
-    "q5_revenue_by_nation", "window_top_orders", "text_profile",
-    "dedup_exact", "dedup_minhash_lsh", "dedup_clusters",
-    "dedup_token_jaccard", "dedup_simhash", "ann_cosine_topk", "ann_ivf_topk",
-    "dedup_embedding_cosine", "text_wordcount_top",
-]
+from bench import QUERY_NAMES, build_spark  # noqa: E402  (same session config + suite as the contract)
 
 
 def main() -> None:

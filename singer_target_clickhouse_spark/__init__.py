@@ -11,7 +11,7 @@ ClickHouse tables) on idiomatic Spark:
   (``shred``), mirroring ``src/RecordProcessor.ts`` semantics with zero
   per-row Python.
 - ReplacingMergeTree-style latest-wins versioned upsert re-expressed as a
-  bucket-pruned window/MERGE over a snapshot-manifest Parquet lake
+  bucket-pruned ``max_by`` aggregate MERGE over a snapshot-manifest Parquet lake
   (``lake``), mirroring ``src/StreamProcessor.ts`` + ClickHouse engine
   semantics.
 - Schema evolution by diffing incoming SCHEMA messages against lake metadata

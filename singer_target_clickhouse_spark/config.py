@@ -79,18 +79,6 @@ class Config:
     #: distinct collect.
     max_cleaning_values: int = 10_000
 
-    #: Upper bound on batch rows for the broadcast-keys MERGE plan
-    #: (``lake.merge.merge_upsert(broadcast_keys=True)``): when the batch's
-    #: stats-time row count is at or below this, the merge anti-joins the
-    #: target against a broadcast of the batch's pk set instead of running a
-    #: full aggregate over target ∪ batch — one full-lake shuffle per batch
-    #: instead of two (value-identical; see merge_upsert). Sizing: the
-    #: broadcast carries KEY COLUMNS ONLY (~tens of bytes per key), so 4M
-    #: keys is a few hundred MB held once per executor — comfortably inside
-    #: a production executor heap and far above any sane micro-batch. Larger
-    #: batches fall back to the aggregate plan automatically. 0 disables.
-    merge_broadcast_keys_max: int = 4_000_000
-
     #: Auto-GC: run ``catalog.vacuum`` on a table every N snapshot commits
     #: (0 disables). Keeps long replays storage-bounded — a bucket-pruned
     #: merge strands one superseded file set per touched bucket per batch.

@@ -425,12 +425,16 @@ class SingerEngine:
             if not matches and not dropped and not archived:
                 self.catalog.rename_table(table, f"{DROPPED_TABLE_PREFIX}{table}")
 
-    def _maybe_vacuum(self, name: str, snap: TableSnapshot) -> None:
-        """Auto-GC every ``vacuum_every_commits`` snapshot commits
-        (round-2 VERDICT #9): bounds on-disk amplification over a long replay
-        — each bucket-pruned merge strands one superseded file set per
-        touched bucket. ``retain_last=2`` keeps the previous snapshot
-        readable for lazy frames still in flight within this batch."""
+    def _commit(self, name: str, snap: TableSnapshot) -> None:
+        """Commit a data-rewriting snapshot, then auto-GC the table every
+        ``vacuum_every_commits`` snapshot ids: bounds on-disk amplification
+        over a long replay — each bucket-pruned rewrite strands one
+        superseded file set per touched bucket. Every data commit goes
+        through here, so a table committed twice per batch (children: append
+        + orphan delete) still lands on the vacuum ids. ``retain_last=2``
+        keeps the previous snapshot readable for lazy frames still in flight
+        within this batch."""
+        self.catalog.commit_snapshot(name, snap)
         every = self.config.vacuum_every_commits
         if every and snap.snapshot_id % every == 0:
             self.catalog.vacuum(name, retain_last=2)
@@ -488,18 +492,13 @@ class SingerEngine:
         deletes: Optional[DataFrame] = None,
         bounds: Optional[tuple[int, int]] = None,
         touched_hint: Optional[list[int]] = None,
-        rows_hint: Optional[int] = None,
     ) -> None:
         """records / deletes: (record string, _seq long) for ONE stream.
-        ``bounds`` (min seq, max seq over records+deletes), ``touched_hint``
-        (root buckets this batch touches, possibly a safe superset) and
-        ``rows_hint`` (records+deletes row count, an upper bound on merge
-        input after the replay gate) are precomputed by the batch-level
-        stats pass when available — the whole preamble is then one Spark
-        job, and ``rows_hint`` gates the broadcast-keys merge plan."""
-        import time as _time
-
-        t_start = _time.time()
+        ``bounds`` (min seq, max seq over records+deletes) and
+        ``touched_hint`` (root buckets this batch touches, possibly a safe
+        superset) are precomputed by the batch-level stats pass when
+        available — the whole preamble is then one Spark job."""
+        t_start = time.time()
         meta = state.meta
         if bounds is None:
             both = records if deletes is None else records.unionByName(deletes)
@@ -588,7 +587,7 @@ class SingerEngine:
                 snap = self.catalog.snapshot(meta.table_name)
                 snap = M.delete_where(self.catalog, meta.table_name, cond, snap=snap)
                 snap.cleaned_values = sorted(state.cleaned_values | new_vals)
-                self.catalog.commit_snapshot(meta.table_name, snap)
+                self._commit(meta.table_name, snap)
                 state.cleaned_values |= new_vals
                 if meta.children:
                     # The wipe rewrote root rows across ALL buckets; the
@@ -606,7 +605,6 @@ class SingerEngine:
         try:
             self._merge_stream_tables(
                 state, records, deletes, lo, hi, run_base, t_start, touched_hint,
-                rows_hint,
             )
         finally:
             if multi_node:
@@ -622,7 +620,6 @@ class SingerEngine:
         run_base: int,
         t_start: float,
         touched_hint: Optional[list[int]] = None,
-        rows_hint: Optional[int] = None,
     ) -> None:
         meta = state.meta
         with self._phase("snap_io"):
@@ -647,8 +644,7 @@ class SingerEngine:
             snap.last_applied_seq = hi
             snap.run_id = self.run_id
             with self._phase("commit_io"):
-                self.catalog.commit_snapshot(node.table_name, snap)
-                self._maybe_vacuum(node.table_name, snap)
+                self._commit(node.table_name, snap)
 
         batch_root = shredded[meta.table_name]
         touched: Optional[list[int]] = touched_hint
@@ -660,30 +656,11 @@ class SingerEngine:
             if touched is None and meta.children and self.config.orphan_delete_per_batch:
                 # needed again for the bucket-aligned orphan delete below
                 touched = self.catalog.touched_buckets(batch_root, root_snap)
-            # broadcast-keys plan when the batch is provably bounded: the
-            # stats row count is an upper bound on merge input (the replay
-            # gate only shrinks it), so key-set size <= rows_hint. The
-            # shredded batch is cached around the merge: the broadcast key
-            # build is its own (third) Spark job and materializes the cache,
-            # so the main merge job re-reads shredded rows instead of
-            # re-running the from_json shred — raw JSON still parses exactly
-            # once per batch on this path.
-            small = (
-                rows_hint is not None
-                and 0 < rows_hint <= self.config.merge_broadcast_keys_max
-            )
-            if small:
-                batch_root = batch_root.cache()
-            try:
-                with self._phase("root_merge"):
-                    root_snap = M.merge_upsert(
-                        self.catalog, meta.table_name, batch_root,
-                        snap=root_snap, tombstone_col="__ts", touched=touched,
-                        broadcast_keys=small,
-                    )
-            finally:
-                if small:
-                    batch_root.unpersist()
+            with self._phase("root_merge"):
+                root_snap = M.merge_upsert(
+                    self.catalog, meta.table_name, batch_root,
+                    snap=root_snap, tombstone_col="__ts", touched=touched,
+                )
         else:
             if deletes is not None and not deletes.isEmpty():
                 raise ValueError(
@@ -695,11 +672,8 @@ class SingerEngine:
         root_snap.run_seq_base = run_base
         root_snap.run_id = self.run_id
         with self._phase("commit_io"):
-            self.catalog.commit_snapshot(meta.table_name, root_snap)
-            self._maybe_vacuum(meta.table_name, root_snap)
+            self._commit(meta.table_name, root_snap)
         if self.config.emit_lineage:
-            import time as _time
-
             # parquet footers read driver-side: lineage adds NO Spark job
             with self._phase("lineage"):
                 rows_after = self.catalog.footer_row_count(
@@ -716,7 +690,7 @@ class SingerEngine:
                     "engine": root_snap.engine,
                     "buckets_touched": len(touched) if touched is not None else None,
                     "rows_in_touched_buckets": rows_after,
-                    "wall_sec": round(_time.time() - t_start, 3),
+                    "wall_sec": round(time.time() - t_start, 3),
                     # which pool thread applied this stream: audit evidence
                     # that multi-stream batches actually overlap
                     "thread": threading.current_thread().name,
@@ -740,7 +714,7 @@ class SingerEngine:
                 self.catalog, node.table_name, root_df, root_pk, child_root_cols,
                 buckets=buckets, snap=None,
             )
-            self.catalog.commit_snapshot(node.table_name, snap)
+            self._commit(node.table_name, snap)
 
     def _bucket_probe_expr(self):
         """Per-row bucket id of the record's primary key for every KNOWN
@@ -944,13 +918,12 @@ class SingerEngine:
             if r["raw"] is not None:
                 continue
             if r["type"] in ("RECORD", "DELETED_RECORD"):
-                cur = stream_stats.setdefault(r["stream"], [r["lo"], r["hi"], 0, set(), 0])
+                cur = stream_stats.setdefault(r["stream"], [r["lo"], r["hi"], 0, set()])
                 cur[0] = min(cur[0], r["lo"])
                 cur[1] = max(cur[1], r["hi"])
                 if r["type"] == "DELETED_RECORD":
                     cur[2] += r["n"]
                 cur[3].update(r["buckets"] or [])
-                cur[4] += r["n"]
             else:
                 # reference warn-and-skip (processStream.ts:119-121)
                 log.warning("Message type not handled: %s x%s (first seq %s)",
@@ -959,7 +932,7 @@ class SingerEngine:
         records = parsed.where(F.col("type") == "RECORD")
         deletes = parsed.where(F.col("type") == "DELETED_RECORD")
         tasks = []
-        for stream, (lo, hi, dels, buckets, n_rows) in sorted(stream_stats.items()):
+        for stream, (lo, hi, dels, buckets) in sorted(stream_stats.items()):
             # schema resolution / recovery stays serial (mutates self.streams)
             if stream not in self.streams and not self._recover_stream(stream):
                 raise RecordBeforeSchemaError(
@@ -969,9 +942,9 @@ class SingerEngine:
                 raise RecordBeforeSchemaError(
                     f"Record message received before Schema is defined for [{stream}]"
                 )
-            tasks.append((stream, lo, hi, dels, buckets, n_rows))
+            tasks.append((stream, lo, hi, dels, buckets))
 
-        def apply_one(stream, lo, hi, dels, buckets, n_rows):
+        def apply_one(stream, lo, hi, dels, buckets):
             self._apply_stream_records(
                 self.streams[stream],
                 records.where(F.col("stream") == stream).select("record", SEQ_COL),
@@ -984,7 +957,6 @@ class SingerEngine:
                 # empty set => stream wasn't covered by the stats-time probe
                 # (meta unknown when the job ran) => merge computes it itself
                 touched_hint=sorted(buckets) if buckets else None,
-                rows_hint=n_rows,
             )
 
         # Per-stream merges are independent (disjoint tables, shared read-only

@@ -49,10 +49,10 @@ def merge_upsert(
     snap: Optional[TableSnapshot] = None,
     tombstone_col: Optional[str] = None,
     touched: Optional[list[int]] = None,
-    broadcast_keys: bool = False,
 ) -> TableSnapshot:
     """MERGE INTO … WHEN MATCHED AND s._ver > t._ver THEN UPDATE/DELETE, as
-    union + window over the touched buckets only.
+    a ``max_by`` aggregate (``latest_wins``) over target ∪ batch, restricted
+    to the touched buckets.
 
     The batch must carry the full table schema (pks, simple cols, `_ver`),
     plus optionally a boolean ``tombstone_col``: DELETED_RECORD events enter
@@ -60,31 +60,9 @@ def merge_upsert(
     exactly the versions below k and a later re-insert survives — strictly
     ordered CDC semantics (the reference applies buffered DELETEs at commit
     time, which can drop a re-insert landing in the same commit window;
-    replay convergence per BASELINE.json requires the ordered form).
-
-    ``broadcast_keys=True`` (round-6, the engine enables it when the batch's
-    row count is known and bounded) switches the cross-set dedup from a
-    full aggregate over target ∪ batch to:
-
-        latest_wins(batch)  ∪  (target ANTI-JOIN broadcast(batch pk set))
-
-    which is value-identical because every batch ``_ver`` strictly exceeds
-    every target ``_ver`` for this table: versions derive from the source
-    offset (``_ver = run_seq_base + _seq + 1``), the replay gate drops
-    ``_seq <= last_applied_seq`` before the merge, and a new run re-bases to
-    ``run_seq_base + last_applied_seq + 2`` — above everything committed
-    (``engine._run_base``). So for any key present in the batch the
-    max-``_ver`` row over target ∪ batch IS the max-``_ver`` row of the
-    batch alone, and keys absent from the batch keep their target row
-    untouched. The plan effect (guide §2.3/§2.4): the touched target
-    buckets no longer flow through a pk Exchange + aggregate — they stream
-    scan → broadcast anti-join → the (unavoidable) bucket-layout exchange
-    of the write, so the lake crosses one shuffle per batch instead of two
-    and the aggregate's input shrinks from O(lake + batch) to O(batch).
-    The anti-join key set is key columns only — the classic broadcast-less
-    -than-the-plan trick (guide §8) — and joins null-safely so null pks
-    group exactly like the aggregate did. Correctness of both paths is
-    pinned by a parity test (tests/test_lake.py).
+    replay convergence per BASELINE.json requires the ordered form). The
+    max-`_ver` row per key wins whichever side it comes from, so a batch row
+    older than the committed one loses to it.
 
     Returns the updated (uncommitted) snapshot.
     """
@@ -98,18 +76,6 @@ def merge_upsert(
     if not touched:
         return snap
     target = catalog.read(name, buckets=touched, snap=snap)
-    if broadcast_keys:
-        latest = latest_wins(batch, snap.pk, "_ver")
-        keys = batch.select(*snap.pk).dropDuplicates().select(
-            *[F.col(c).alias(f"__k_{c}") for c in snap.pk]
-        )
-        cond = F.lit(True)
-        for c in snap.pk:
-            cond = cond & target[c].eqNullSafe(F.col(f"__k_{c}"))
-        kept = target.join(F.broadcast(keys), cond, "left_anti")
-        if tombstone_col:
-            latest = latest.where(~F.col(tombstone_col)).drop(tombstone_col)
-        return catalog.overwrite_buckets(name, kept.unionByName(latest), touched, snap)
     if tombstone_col:
         target = target.withColumn(tombstone_col, F.lit(False))
     # No explicit salting needed: latest_wins is a max_by hash aggregate whose
@@ -134,26 +100,6 @@ def append_rows(
     snap = snap or catalog.snapshot(name)
     cols = [f.name for f in snap.spark_schema.fields]
     return catalog.append(name, batch.select(*cols), snap)
-
-
-def delete_by_keys(
-    catalog: LakeCatalog,
-    name: str,
-    keys: DataFrame,
-    snap: Optional[TableSnapshot] = None,
-) -> TableSnapshot:
-    """Hard delete by PK (reference D4, ``DeletedRecordProcessor.ts:24-58``):
-    anti-join the touched buckets against the key set."""
-    snap = snap or catalog.snapshot(name)
-    if not snap.pk:
-        raise ValueError(f"cannot push deleted record to table {name} without pk")
-    keys = keys.select(*snap.pk).distinct()
-    touched = catalog.touched_buckets(keys, snap)
-    if not touched:
-        return snap
-    target = catalog.read(name, buckets=touched, snap=snap)
-    kept = target.join(F.broadcast(keys), on=snap.pk, how="left_anti")
-    return catalog.overwrite_buckets(name, kept, touched, snap)
 
 
 def delete_where(

@@ -259,31 +259,6 @@ def simhash_profile(
     return sums.select(F.col(id_col), out.alias("simhash"))
 
 
-def _simhash_from_hashes(hashes: Column, bits: int = 48) -> Column:
-    def bit_vote(j: int):
-        return lambda acc, h: acc + (F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1)
-
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), bit_vote(j))
-        out = out + F.when(vote > 0, F.lit(1).cast("long") * (2 ** j)).otherwise(F.lit(0).cast("long"))
-    return out
-
-
-def simhash_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Docs sharing an identical simhash (strong near-dup signal). Goes
-    through the staged ``simhash_profile`` so each side of the self-join
-    tokenizes+hashes every document exactly once."""
-    s = simhash_profile(df, text_col=text_col, id_col=id_col).select(
-        F.col(id_col).alias("id"), F.col("simhash").alias("sh")
-    )
-    return (
-        s.alias("a")
-        .join(s.alias("b"), (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"), F.col("a.sh").alias("simhash"))
-    )
-
-
 # -------------------------------------------------------------- token jaccard
 
 def token_jaccard_pairs(

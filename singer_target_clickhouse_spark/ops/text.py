@@ -67,10 +67,6 @@ def _mean_word_len(toks: Column) -> Column:
     return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(total / F.size(toks))
 
 
-def mean_word_len(col: Column) -> Column:
-    return _mean_word_len(tokens(col))
-
-
 def _quality_score(col: Column, toks: Column) -> Column:
     length_term = F.least(F.length(col) / F.lit(500.0), F.lit(1.0))
     punct_term = F.lit(1.0) - F.least(punct_ratio(col) * 4, F.lit(1.0))

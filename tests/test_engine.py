@@ -501,13 +501,10 @@ def test_stats_pass_bucket_hint_replaces_touched_job(spark, lake, monkeypatch):
 
 
 def test_replacing_batch_runs_two_jobs(spark, lake):
-    # round-2 VERDICT #7: stats+control+buckets fold into ONE job, so a
-    # replacing single-node batch is stats + merge-write = 2 Spark jobs.
-    # Round 6 adds exactly one more: the broadcast build of the batch key
-    # set (an O(batch) job over the cached shredded rows) that lets the
-    # merge anti-join the target instead of re-aggregating the whole lake —
-    # one full-lake exchange per batch instead of two. Bound stays pinned
-    # so a regression back to per-stream preamble jobs still fails here.
+    # stats+control+buckets fold into ONE job, so a replacing single-node
+    # batch is stats + merge-write = 2 Spark jobs. The bound is pinned so a
+    # regression back to per-stream preamble jobs (or an extra merge-side
+    # job) fails here.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         schema = json.dumps({
@@ -525,7 +522,7 @@ def test_replacing_batch_runs_two_jobs(spark, lake):
                              "record": {"id": i, "v": 2}}) for i in range(10)]
         e.apply_lines(_mk_lines(spark, recs2, 100))
         jobs = sc.statusTracker().getJobIdsForGroup("steady-batch")
-        assert len(jobs) <= 3, f"expected <=3 jobs in steady-state batch, got {len(jobs)}"
+        assert len(jobs) <= 2, f"expected <=2 jobs in steady-state batch, got {len(jobs)}"
     finally:
         spark.sparkContext.setJobGroup("", "", False)
         spark.conf.set("spark.sql.adaptive.enabled", "true")

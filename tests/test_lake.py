@@ -122,6 +122,13 @@ def test_vacuum_retain_last_keeps_previous_snapshot(spark, tmp_path):
     assert cat.row_count("tickets") == 1
 
 
+def _parquet_count(lake: str, table: str) -> int:
+    n = 0
+    for _root, _dirs, files in os.walk(os.path.join(lake, "tables", table)):
+        n += sum(1 for f in files if f.endswith(".parquet"))
+    return n
+
+
 def test_auto_vacuum_bounds_storage(spark, tmp_path):
     # replaying many batches with auto-vacuum keeps on-disk parquet bounded
     # (without it, every merge strands a superseded file set per bucket)
@@ -143,24 +150,54 @@ def test_auto_vacuum_bounds_storage(spark, tmp_path):
     for i in range(6):
         e.apply_lines(batch(i))
 
-    def parquet_count():
-        n = 0
-        for _root, _dirs, files in os.walk(os.path.join(lake, "tables", "av")):
-            n += sum(1 for f in files if f.endswith(".parquet"))
-        return n
-
     # 6 merges over 2 buckets: unvacuumed would hold ~6 file generations;
     # retain_last=2 every 2 commits keeps at most ~3 generations on disk
-    assert parquet_count() <= 3 * 2
+    assert _parquet_count(lake, "av") <= 3 * 2
     got = sorted((r["id"], r["v"]) for r in e.catalog.read("av").collect())
     assert got == [(k, 5) for k in range(8)]
 
 
-def test_merge_upsert_broadcast_keys_parity(spark, tmp_path):
-    # round-6: the broadcast-keys merge plan (batch-latest ∪ target anti-join
-    # batch keys) must be value-identical to the aggregate plan over
-    # target ∪ batch — across inserts, updates, tombstones, a same-batch
-    # record+tombstone sequence, and null keys.
+def test_auto_vacuum_bounds_child_storage(spark, tmp_path):
+    # a child table commits twice per batch (append, then the per-batch
+    # orphan delete); auto-vacuum must still fire on it and keep its on-disk
+    # parquet bounded like the root's
+    lake = str(tmp_path / "lakeAVC")
+    e = SingerEngine(spark, Config(lake_root=lake, n_buckets=2, vacuum_every_commits=2))
+    schema = json.dumps({
+        "type": "SCHEMA", "stream": "avc", "schema": {"type": "object", "properties": {
+            "id": {"type": "integer"},
+            "items": {"type": ["null", "array"], "items": {
+                "type": "object", "properties": {"x": {"type": ["null", "integer"]}}}}}},
+        "key_properties": ["id"]})
+
+    def batch(i):
+        recs = [json.dumps({"type": "RECORD", "stream": "avc",
+                            "record": {"id": k, "items": [{"x": i}, {"x": i + 1}]}})
+                for k in range(8)]
+        lines = ([schema] if i == 0 else []) + recs
+        base = i * 100
+        return spark.createDataFrame(
+            [(l, base + j) for j, l in enumerate(lines)], "value string, _seq long")
+
+    n_batches = 8
+    for i in range(n_batches):
+        e.apply_lines(batch(i))
+
+    child = "avc__items"
+    assert child in e.catalog.list_tables()
+
+    # every batch strands a superseded file set per bucket on the child
+    # (append + orphan-delete rewrite); without vacuum that grows with the
+    # batch count, with it at most ~3 generations stay on disk
+    assert _parquet_count(lake, child) <= 3 * 2
+    got = sorted((r["x"],) for r in e.catalog.read(child).collect())
+    assert got == [(n_batches - 1,)] * 8 + [(n_batches,)] * 8
+
+
+def test_merge_upsert_latest_wins_golden(spark, tmp_path):
+    # merge_upsert keeps the max-_ver row per key over target ∪ batch across
+    # inserts, updates, tombstones, a same-batch record+tombstone sequence,
+    # null keys, and batch rows older than the committed ones.
     from pyspark.sql import types as T
 
     from singer_target_clickhouse_spark.lake import merge as M
@@ -186,25 +223,22 @@ def test_merge_upsert_broadcast_keys_parity(spark, tmp_path):
          (None, "n2", 14, False), ("d", "1", 15, False)],
         # tombstone the null key; touch a single bucket only
         [(None, None, 21, True), ("d", "2", 22, False)],
+        # stale versions below the committed rows' _ver: an update of "b",
+        # an update of "d" and a tombstone of "a" — the committed rows survive
+        [("b", "stale", 7, False), ("d", "stale", 16, False), ("a", None, 3, True)],
     ]
 
-    results = {}
-    for mode in (False, True):
-        cat = LakeCatalog(str(tmp_path / f"lake_{mode}"), spark)
-        snap = cat.create_table(
-            "t", schema=schema,
-            ch_columns=[{"name": c, "type": "String", "is_in_sorting_key": c == "k"}
-                        for c in ("k", "v")],
-            pk=["k"], order_by=["k"], engine="replacing",
-            bucket_by=["k"], n_buckets=4,
-        )
-        for rows in batches:
-            snap = M.merge_upsert(cat, "t", batch_df(rows), snap=snap,
-                                  tombstone_col="__ts", broadcast_keys=mode)
-            cat.commit_snapshot("t", snap)
-        results[mode] = sorted(map(tuple, cat.read("t").collect()),
-                               key=lambda r: (r[0] is None, r))
-    assert results[True] == results[False]
-    # and the merged content is what ordered CDC semantics demand
-    assert [(r[0], r[1]) for r in results[True]] == [
-        ("a", "3"), ("b", "2"), ("d", "2")]
+    cat = LakeCatalog(str(tmp_path / "lake"), spark)
+    snap = cat.create_table(
+        "t", schema=schema,
+        ch_columns=[{"name": c, "type": "String", "is_in_sorting_key": c == "k"}
+                    for c in ("k", "v")],
+        pk=["k"], order_by=["k"], engine="replacing",
+        bucket_by=["k"], n_buckets=4,
+    )
+    for rows in batches:
+        snap = M.merge_upsert(cat, "t", batch_df(rows), snap=snap, tombstone_col="__ts")
+        cat.commit_snapshot("t", snap)
+    got = sorted(map(tuple, cat.read("t").collect()), key=lambda r: (r[0] is None, r))
+    # the merged content is what ordered CDC semantics demand
+    assert got == [("a", "3", 13), ("b", "2", 11), ("d", "2", 22)]
