@@ -13,12 +13,8 @@ events/sec in ``extra``.
 Env knobs:
 - ``SPARK_GRAFT_SF_DIR``  data directory (default /root/testdata/sf0.1)
 - ``SPARK_GRAFT_CPUS``    local[] parallelism (default 32)
-- ``STCS_BENCH_ONLY``     comma-separated subset of query names (used by
-  tools/bench_scaling.py to isolate cdc_replay at two core counts)
-- ``STCS_BENCH_SHUFFLE`` / ``STCS_BENCH_MAX_SPLIT``  replay-path task
-  granularity (default 4x cores / 32 MB — scoped to ``bench_cdc_replay``)
-- ``STCS_BENCH_SUITE_SHUFFLE`` / ``STCS_BENCH_SUITE_SPLIT``  query-suite
-  granularity (default 1x cores / 128 MB)
+- ``STCS_BENCH_DOC_CAP``  doc/vec id cap of the pair-enumeration queries
+  (default 1500, recorded in ``extra``)
 """
 
 from __future__ import annotations
@@ -45,27 +41,18 @@ QUERY_NAMES = [
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
 
-    # AQE re-plans every exchange at runtime — correct at 100 TB where stats
-    # surprise you, but a measurable per-batch serial cost on fixed-shape
-    # micro-batch plans; STCS_BENCH_AQE=0 lets the scaling harness measure
-    # without it.
-    aqe = os.environ.get("STCS_BENCH_AQE", "1") == "1"
     # Session-level granularity = QUERY-SUITE granularity: one shuffle
-    # partition per core and default (128 MB) scan splits. The replay-path
-    # over-decomposition (4x tasks/core, 32 MB splits — measured to help the
-    # pinned low-core scaling runs by amortizing stragglers) is scoped to
-    # ``bench_cdc_replay`` via runtime conf: applied globally in round 4 it
-    # slowed the whole tiny-data query suite ~21-42% (r3 61.1 s -> r4 87.0 s
-    # at local[32] sf0.1; see round-4 VERDICT "What's wrong #1").
+    # partition per core and default (128 MB) scan splits. The replay path's
+    # finer granularity is scoped to ``bench_cdc_replay`` via runtime conf:
+    # applied globally in round 4 it slowed the whole tiny-data query suite
+    # ~21-42% (r3 61.1 s -> r4 87.0 s at local[32] sf0.1; see round-4
+    # VERDICT "What's wrong #1").
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("stcs-bench")
-        .config("spark.sql.shuffle.partitions",
-                os.environ.get("STCS_BENCH_SUITE_SHUFFLE", str(max(cpus, 8))))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.default.parallelism", str(max(cpus, 8)))
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("STCS_BENCH_SUITE_SPLIT", str(128 * 1024 * 1024)))
-        .config("spark.sql.adaptive.enabled", str(aqe).lower())
+        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "48g")
@@ -75,20 +62,16 @@ def build_spark(cpus: int):
 
 class _replay_granularity:
     """Scope the replay over-decomposition (4x tasks per core for shuffles,
-    <=32 MB scan splits) to the CDC-replay measurement. One-wave stages
-    (tasks == slots) leave cores idle behind stragglers — measured as
-    stats-stage scaling 0.76 and write-stage 0.63 at 4->16 pinned cores with
-    exactly-one-wave granularity; 3-6 waves amortize stragglers, which is
-    also the standard sizing on a real cluster. Runtime-settable confs only
-    (shuffle partitions, split size); restored on exit so the query suite
-    keeps the coarser session granularity."""
+    <=32 MB scan splits) to the CDC-replay measurement: one-wave stages
+    (tasks == slots) leave cores idle behind stragglers, several waves
+    amortize them. Runtime-settable confs only (shuffle partitions, split
+    size); restored on exit so the query suite keeps the coarser session
+    granularity."""
 
     def __init__(self, spark, cpus: int):
         self.spark = spark
-        self.shuffle = os.environ.get(
-            "STCS_BENCH_SHUFFLE", str(min(max(4 * cpus, 16), 64))
-        )
-        self.split = os.environ.get("STCS_BENCH_MAX_SPLIT", str(32 * 1024 * 1024))
+        self.shuffle = str(min(max(4 * cpus, 16), 64))
+        self.split = str(32 * 1024 * 1024)
 
     def __enter__(self):
         c = self.spark.conf
@@ -105,7 +88,7 @@ class _replay_granularity:
             self.spark.conf.set(k, v)
 
 
-def bench_cdc_replay(spark, sf_dir: str, n_files: int = None, files_per_trigger: int = None):
+def bench_cdc_replay(spark, sf_dir: str):
     """events/sec applied through the real architecture: an offset-bearing
     JSONL change log tailed by the Structured Streaming driver
     (checkpointed foreachBatch -> shred -> bucket-pruned MERGE), replayed to
@@ -115,36 +98,17 @@ def bench_cdc_replay(spark, sf_dir: str, n_files: int = None, files_per_trigger:
     from singer_target_clickhouse_spark.gen import REPO_STREAM, change_events_df, write_jsonl
     from singer_target_clickhouse_spark.streaming import StreamingDriver
 
-    n = int(os.environ.get("STCS_BENCH_EVENTS", "0")) or (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    )
-    n_files = n_files or int(os.environ.get("STCS_BENCH_NFILES", "8"))
-    files_per_trigger = files_per_trigger or int(os.environ.get("STCS_BENCH_FPT", "2"))
-    content_len = int(os.environ.get("STCS_BENCH_CONTENT_LEN", "64"))
-    # The generated log is a pure function of (n, n_files, content_len):
-    # STCS_BENCH_LOG_DIR lets a scaling campaign generate it ONCE and replay
-    # the identical bytes at every parallelism level (generation is untimed
-    # but took longer than the measured replay at low core counts).
-    shared = os.environ.get("STCS_BENCH_LOG_DIR")
-    if shared and os.path.exists(os.path.join(shared, "_SUCCESS")):
-        log_dir = shared
-    else:
-        events = change_events_df(spark, n, n_repos=200, paths_per_repo=2000,
-                                  content_len=content_len)
-        log_dir = write_jsonl(events, shared or tempfile.mkdtemp(prefix="stcs_bench_log_"),
-                              n_files=n_files, with_offsets=True)
+    n = spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    events = change_events_df(spark, n, n_repos=200, paths_per_repo=2000, content_len=64)
+    log_dir = write_jsonl(events, tempfile.mkdtemp(prefix="stcs_bench_log_"),
+                          n_files=8, with_offsets=True)
     lake = tempfile.mkdtemp(prefix="stcs_bench_lake_")
     ckpt = tempfile.mkdtemp(prefix="stcs_bench_ckpt_")
-    # Bucket count is DATA GEOMETRY, not a per-level tunable: a scaling
-    # campaign must hold it constant across parallelism levels. 32 is sized
-    # for the sf0.1 lake; the 8->32 campaign showed the merge stage's write
-    # parallelism is bounded by touched buckets (one file per bucket per
-    # commit), so STCS_BENCH_BUCKETS lets a campaign size buckets >= several
-    # x total cores, the same rule the 100 TB sizing note in config.py states.
-    n_buckets = int(os.environ.get("STCS_BENCH_BUCKETS", "32"))
+    # 8 log files, 2 per trigger: 4 micro-batches into a 32-bucket lake
+    n_buckets = 32
     driver = StreamingDriver(
         spark, Config(lake_root=lake, n_buckets=n_buckets), log_dir, ckpt,
-        max_files_per_trigger=files_per_trigger, offsets_in_log=True,
+        max_files_per_trigger=2, offsets_in_log=True,
     )
     os.sync()  # flush the generated log before the timed window
     t0 = time.time()
@@ -168,7 +132,7 @@ def bench_cdc_replay(spark, sf_dir: str, n_files: int = None, files_per_trigger:
         "median_batch_events_per_sec": round(per_batch / median, 1),
         "batch_times": [round(b, 2) for b in bt],
         # per-batch serial-window attribution (engine phase clocks +
-        # streaming trigger gap) — the scaling campaign's decomposition input
+        # streaming trigger gap)
         "batch_phases": phases,
         "final_rows": rows,
         "n_buckets": n_buckets,
@@ -178,7 +142,6 @@ def bench_cdc_replay(spark, sf_dir: str, n_files: int = None, files_per_trigger:
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    only = set(filter(None, os.environ.get("STCS_BENCH_ONLY", "").split(",")))
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
     # Bound the O(n^2)-by-construction pair-enumeration ops (see _t in
@@ -194,23 +157,17 @@ def main():
         "doc_cap": int(os.environ["STCS_BENCH_DOC_CAP"]),
     }
 
-    def run(name, fn):
-        if only and name not in only:
-            return
-        t0 = time.time()
-        fn()
-        timings[name] = round(time.time() - t0, 2)
-
     # flagship: CDC replay (runs under its own finer task granularity)
-    if not only or "cdc_replay" in only:
-        with _replay_granularity(spark, cpus):
-            elapsed, info = bench_cdc_replay(spark, sf_dir)
-        timings["cdc_replay"] = round(elapsed, 2)
-        extra.update(info)
+    with _replay_granularity(spark, cpus):
+        elapsed, info = bench_cdc_replay(spark, sf_dir)
+    timings["cdc_replay"] = round(elapsed, 2)
+    extra.update(info)
 
     qs = entrymod.queries()
     for name in QUERY_NAMES:
-        run(name, lambda n=name: qs[n](spark, sf_dir).write.format("noop").mode("overwrite").save())
+        t0 = time.time()
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        timings[name] = round(time.time() - t0, 2)
 
     total = round(sum(timings.values()), 2)
     print(json.dumps({

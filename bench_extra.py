@@ -1,6 +1,6 @@
-"""Round-6 optimization measurement harness (NOT the driver contract —
-``bench.py`` is frozen; this file exists so optimization evidence can be
-gathered per guide §1 without touching the measured entry point).
+"""Per-query measurement harness beside ``bench.py``: times single suite
+queries or dumps their plans, under ``bench.py``'s session config and query
+list.
 
 Modes:
   python bench_extra.py time [query ...]    noop-sink timing, N repeats each
