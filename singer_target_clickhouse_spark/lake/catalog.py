@@ -1,11 +1,8 @@
 """Snapshot-manifest Parquet lake — an Iceberg-emulating table format.
 
-The north rule targets Iceberg tables; no Iceberg jars ship in this sandbox,
-so the engine is written against this thin catalog whose semantics mirror the
-Iceberg operations we need (atomic snapshot commit, MERGE-style rewrite,
-ALTER add/widen/drop, rename). Swapping in a real Iceberg catalog is a matter
-of reimplementing this class over ``spark.sql("MERGE INTO …")`` — the engine
-above it is unchanged.
+The engine's one sink: a thin catalog of Parquet files plus JSON manifests
+whose semantics mirror the Iceberg table operations the engine needs (atomic
+snapshot commit, MERGE-style rewrite, ALTER add/widen/drop, rename).
 
 Layout per table::
 
