@@ -205,6 +205,28 @@ def _spark_type_of_ch(ch_type: str) -> T.DataType:
     return T.ArrayType(base) if array else base
 
 
+def _flat_delete_keys(pks, translate: bool, parsed=None):
+    """Key columns of a DELETED_RECORD payload, which carries every pk at its
+    flat ``p.prop`` name, even a nested-path one. Returns the payload's
+    ``from_json`` struct and one key column per pk, read from ``parsed`` (a
+    projection of that struct) or else from the struct itself. With
+    ``translate`` on, the fields parse as raw strings and go through the same
+    ``_translate_scalar`` coercion as record keys."""
+    schema = T.StructType(
+        [
+            T.StructField(p.prop, T.StringType() if translate else (p.spark_type or T.StringType()))
+            for p in pks
+        ]
+    )
+    struct = F.from_json(F.col("record"), schema)
+    src = struct if parsed is None else parsed
+    keys = [
+        _translate_scalar(src.getField(p.prop), p) if translate else src.getField(p.prop)
+        for p in pks
+    ]
+    return struct, keys
+
+
 class SingerEngine:
     def __init__(self, spark: SparkSession, config: Optional[Config] = None, run_id: Optional[str] = None):
         self.spark = spark
@@ -464,21 +486,11 @@ class SingerEngine:
             raise ValueError(
                 f"[{meta.prop}] cannot push deleted record to a stream without pk mapping"
             )
-        translate = self.config.translate_values
-        key_schema = T.StructType(
-            [
-                T.StructField(
-                    p.prop, T.StringType() if translate else (p.spark_type or T.StringType())
-                )
-                for p in pks
-            ]
-        )
-        cols = [F.from_json("record", key_schema).alias("k"), F.col(SEQ_COL)]
-        out = deletes.select(*cols)
-        if translate:
-            sel = [_translate_scalar(F.col(f"k.{p.prop}"), p).alias(p.name) for p in pks]
-        else:
-            sel = [F.col(f"k.{p.prop}").alias(p.name) for p in pks]
+        # parse each payload once: the "k" projection keeps Catalyst from
+        # inlining one from_json per key field
+        parsed, keys = _flat_delete_keys(pks, self.config.translate_values, F.col("k"))
+        out = deletes.select(parsed.alias("k"), F.col(SEQ_COL))
+        sel = [k.alias(p.name) for k, p in zip(keys, pks)]
         for c in meta.simple_columns:
             sel.append(F.lit(None).cast(c.spark_field_type()).alias(c.name))
         sel.append((F.col(SEQ_COL) + F.lit(run_base + 1)).cast("long").alias(meta.version_column))
@@ -798,23 +810,8 @@ class SingerEngine:
         vals = [_column_value(parsed, p, translate) for p in pks]
         bucket = F.pmod(F.xxhash64(*vals), F.lit(snap.n_buckets)).cast("int")
         if any(len(p.path) > 1 for p in pks):
-            # flat-key delete probe, mirroring _tombstones byte-for-byte
-            flat_schema = T.StructType(
-                [
-                    T.StructField(
-                        p.prop,
-                        T.StringType() if translate else (p.spark_type or T.StringType()),
-                    )
-                    for p in pks
-                ]
-            )
-            fparsed = F.from_json(F.col("record"), flat_schema)
-            fvals = [
-                _translate_scalar(fparsed.getField(p.prop), p)
-                if translate
-                else fparsed.getField(p.prop)
-                for p in pks
-            ]
+            # delete payloads key flat (as _tombstones reads them), records nested
+            _, fvals = _flat_delete_keys(pks, translate)
             fbucket = F.pmod(F.xxhash64(*fvals), F.lit(snap.n_buckets)).cast("int")
             return [
                 ((F.col("stream") == stream) & (F.col("type") == "RECORD"), bucket),

@@ -528,13 +528,15 @@ def test_replacing_batch_runs_two_jobs(spark, lake):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
-def test_bucket_hint_flat_delete_keys_for_nested_path_pk(spark, lake, monkeypatch):
+@pytest.mark.parametrize("translate", [False, True])
+def test_bucket_hint_flat_delete_keys_for_nested_path_pk(spark, lake, monkeypatch, translate):
     # A pk prop containing the nested-object separator is extracted NESTED
     # from records (shredder path walk) but FLAT from DELETED_RECORD payloads
     # (_tombstones). The stats-pass probe must use the flat schema for the
     # delete rows: a nested probe reads null from the flat key, hints the
     # wrong bucket, and the tombstone's real bucket is never rewritten — the
-    # delete silently drops (advisor round 3).
+    # delete silently drops (advisor round 3). With translate_values on, the
+    # string-encoded delete key must coerce to the record key's bucket.
     import singer_target_clickhouse_spark.lake.catalog as cat_mod
     from pyspark.sql import functions as F
 
@@ -543,17 +545,18 @@ def test_bucket_hint_flat_delete_keys_for_nested_path_pk(spark, lake, monkeypatc
         "type": "SCHEMA", "stream": "np", "schema": {"type": "object", "properties": {
             prop: {"type": "integer"}, "v": {"type": ["null", "string"]}}},
         "key_properties": [prop]})
-    e = engine(spark, lake)
+    e = engine(spark, lake, translate_values=translate)
     recs = [json.dumps({"type": "RECORD", "stream": "np",
                         "record": {"a": {"b": i}, "v": "x"}}) for i in range(8)]
     e.apply_lines(_mk_lines(spark, [schema] + recs, 0))
 
-    # victim whose true bucket differs from bucket(NULL) — the bucket a
-    # nested probe of the flat delete payload would hint
+    # victim whose true bucket (an integer key hashes as long) differs from
+    # bucket(NULL) — the bucket a nested probe of the flat delete payload
+    # would hint
     n_buckets = e.catalog.snapshot("np").n_buckets
     probe = spark.range(8).select(
         F.col("id").cast("int").alias("i"),
-        F.pmod(F.xxhash64(F.col("id").cast("int")), F.lit(n_buckets)).cast("int").alias("b"),
+        F.pmod(F.xxhash64(F.col("id")), F.lit(n_buckets)).cast("int").alias("b"),
         F.pmod(F.xxhash64(F.lit(None).cast("int")), F.lit(n_buckets)).cast("int").alias("nb"),
     ).collect()
     victim = next(r["i"] for r in probe if r["b"] != r["nb"])
@@ -563,7 +566,7 @@ def test_bucket_hint_flat_delete_keys_for_nested_path_pk(spark, lake, monkeypatc
 
     monkeypatch.setattr(cat_mod.LakeCatalog, "touched_buckets", no_touched_job)
     dels = [json.dumps({"type": "DELETED_RECORD", "stream": "np",
-                        "record": {prop: int(victim)}})]
+                        "record": {prop: str(victim) if translate else int(victim)}})]
     e.apply_lines(_mk_lines(spark, dels, 100))
     ids = sorted(r[0] for r in e.catalog.read("np").select("a__b").collect())
     assert ids == [i for i in range(8) if i != victim]
