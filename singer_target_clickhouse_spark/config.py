@@ -1,10 +1,10 @@
 """Engine configuration.
 
 Mirrors the reference's ``src/Config.ts`` knobs where they still make sense on
-Spark, and adds the Spark-native ones (bucket counts, AQE, checkpointing).
-The reference's row-buffering knobs (``batch_size``, ``insert_stream_timeout``)
-are subsumed by micro-batch triggers and are kept only for documentation
-parity.
+Spark, and adds the Spark-native ones (bucket count, per-batch orphan delete,
+merge concurrency, lineage metrics, cleaning-value cap, auto-vacuum). The
+reference's row-buffering knobs (``batch_size``, ``insert_stream_timeout``)
+have no field here: micro-batch triggers subsume them.
 
 Note the reference defines ``finalize_concurrency`` (default 3,
 ``src/Config.ts:32``) but its finalize pool actually uses ``batch_size``

@@ -80,8 +80,8 @@ class RecordBeforeSchemaError(RuntimeError):
 _PROBE_UNCACHED = object()
 
 #: bound on the in-memory per-batch instrumentation logs (engine.batch_phases,
-#: StreamingDriver.batch_times / batch_phase_log): big enough for any bench or
-#: scaling campaign, finite for a weeks-long streaming driver
+#: StreamingDriver.batch_times / batch_phase_log): big enough for any bench
+#: run, finite for a weeks-long streaming driver
 PHASE_LOG_MAXLEN = 512
 
 
@@ -234,15 +234,13 @@ class SingerEngine:
         self.catalog = LakeCatalog(self.config.lake_root, spark)
         self.run_id = run_id or uuid.uuid4().hex
         self.streams: dict[str, StreamState] = {}
-        #: per-batch wall-clock attribution of the driver-side serial window
-        #: (scaling-evidence instrumentation): one dict of phase -> seconds
-        #: appended per ``apply_lines`` call. Phases whose work is distributed
-        #: ("stats", "write" inside root_merge) still appear — the serial
-        #: share of those is read off a two-parallelism comparison. Bounded
-        #: (round-4 ADVICE): a long-lived streaming driver must not grow an
-        #: unbounded in-memory log — durable per-batch records go to the
-        #: lineage metrics jsonl; this deque keeps the recent window the
-        #: bench/scaling harness reads (far above their 4-7 batch runs).
+        #: per-batch wall-clock attribution of the driver-side serial window:
+        #: one dict of phase -> seconds appended per ``apply_lines`` call.
+        #: Phases whose work is distributed ("stats", "write" inside
+        #: root_merge) appear with their full wall time. Bounded (round-4
+        #: ADVICE): a long-lived streaming driver must not grow an unbounded
+        #: in-memory log — durable per-batch records go to the lineage
+        #: metrics jsonl; this deque keeps the recent window bench.py reads.
         self.batch_phases: "deque[dict[str, float]]" = deque(maxlen=PHASE_LOG_MAXLEN)
         self._ph = _PhaseAcc()
         self._metrics_lock = threading.Lock()

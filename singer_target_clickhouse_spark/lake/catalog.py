@@ -127,7 +127,7 @@ class LakeCatalog:
         self.spark = spark
         #: optional dict[str, float] the engine points at its per-batch phase
         #: accumulator; when set, write/commit walls are attributed into it
-        #: (scaling-evidence instrumentation, zero overhead when unset)
+        #: (per-batch phase instrumentation, zero overhead when unset)
         self.phase_sink: Optional[dict] = None
         os.makedirs(self._tables_dir, exist_ok=True)
 
@@ -301,9 +301,7 @@ class LakeCatalog:
             # this exchange: a round-4 experiment salted buckets to
             # shuffle.partitions write tasks and it amplified files per
             # commit w-fold, growing every later merge's small-file read and
-            # regressing end-to-end throughput — while the measured scaling
-            # gains came entirely from 4x-cores shuffle partitions + 32 MB
-            # scan splits (the salt never engaged at the levels that passed).
+            # regressing end-to-end throughput.
             bucketed = bucketed.repartition(F.col("_bucket"))
         import time
 

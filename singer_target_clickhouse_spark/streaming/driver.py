@@ -59,7 +59,7 @@ class StreamingDriver:
 
         from ..engine import PHASE_LOG_MAXLEN
 
-        #: wall seconds per processed micro-batch (bench / scaling evidence).
+        #: wall seconds per processed micro-batch (read by bench.py).
         #: Bounded like engine.batch_phases (round-4 ADVICE): a long-lived
         #: streaming driver must not grow unbounded in-memory logs.
         self.batch_times: "deque[float]" = deque(maxlen=PHASE_LOG_MAXLEN)
@@ -67,12 +67,10 @@ class StreamingDriver:
         #: plus the streaming trigger overhead between batches
         #: (``trigger_gap`` = wall between previous batch end and this batch
         #: entering foreachBatch: source listing, offset/commit WAL writes)
-        #: plus ABSOLUTE epoch timestamps ``wall_start``/``wall_end`` so an
-        #: external capacity monitor can intersect batch windows with its
-        #: probe samples directly instead of reconstructing them from
-        #: subprocess launch time (round-4 ADVICE: the pre-first-batch
-        #: startup window — imports, JVM, stream init — shifted every
-        #: reconstructed window earlier, misaligning wave-hit flags).
+        #: plus absolute epoch timestamps ``wall_start``/``wall_end`` of the
+        #: batch window, so an outside observer need not reconstruct it from
+        #: process launch time (which would include imports, JVM start and
+        #: stream init).
         self.batch_phase_log: "deque[dict[str, float]]" = deque(maxlen=PHASE_LOG_MAXLEN)
         self._last_batch_end: float = 0.0
 

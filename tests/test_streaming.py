@@ -41,9 +41,8 @@ def test_streaming_apply_and_resume(spark, tmp_path):
     assert eng.catalog.row_count(REPO_STREAM) == 2
     assert eng.read_state() == {"pos": 1}
 
-    # absolute per-batch wall windows (round-4 ADVICE: the scaling monitor
-    # intersects these with its probe samples; reconstructed windows were
-    # shifted by the pre-first-batch startup interval)
+    # absolute per-batch wall windows (round-4 ADVICE: windows reconstructed
+    # from process launch were shifted by the pre-first-batch startup interval)
     import time as _time
     assert d1.batch_phase_log, "expected at least one batch phase record"
     for ph in d1.batch_phase_log:

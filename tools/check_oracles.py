@@ -4,6 +4,8 @@ DuckDB over the same sf directory, compare row count + column names +
 order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
+
+Runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the machine's core count).
 """
 
 from __future__ import annotations
@@ -45,9 +47,10 @@ def normalize(rows, cols):
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
