@@ -41,7 +41,7 @@ class Config:
     #: (reference ``extra_active_tables``, ``src/Config.ts:33``).
     extra_active_tables: list[str] = field(default_factory=list)
 
-    #: Number of hash buckets per table. Merges / key-deletes rewrite only the
+    #: Number of hash buckets per table. Merges / orphan deletes rewrite only the
     #: buckets touched by a batch, so this bounds write amplification; at
     #: 100 TB you want O(10k) buckets so a bucket is a few hundred MB.
     n_buckets: int = 32

@@ -484,10 +484,10 @@ class SingerEngine:
             raise ValueError(
                 f"[{meta.prop}] cannot push deleted record to a stream without pk mapping"
             )
-        # parse each payload once: the "k" projection keeps Catalyst from
-        # inlining one from_json per key field
-        parsed, keys = _flat_delete_keys(pks, self.config.translate_values, F.col("k"))
-        out = deletes.select(parsed.alias("k"), F.col(SEQ_COL))
+        # parse each payload once: the key fields read the "k" projection
+        # instead of each inlining its own from_json
+        struct, keys = _flat_delete_keys(pks, self.config.translate_values, F.col("k"))
+        out = deletes.select(struct.alias("k"), F.col(SEQ_COL))
         sel = [k.alias(p.name) for k, p in zip(keys, pks)]
         for c in meta.simple_columns:
             sel.append(F.lit(None).cast(c.spark_field_type()).alias(c.name))
