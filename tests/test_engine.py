@@ -1,10 +1,12 @@
-"""End-to-end CDC engine tests against the reference's own integration
-fixtures (``/root/reference/tests/data/*.jsonl``), asserting the golden
-outcomes of ``tests/processStream.spec.ts``: final row sets, dedup, deletes,
-cleaning column, schema evolution, retirement, replay convergence."""
+"""End-to-end CDC engine tests asserting the golden outcomes of the
+reference's ``tests/processStream.spec.ts``: final row sets, dedup, deletes,
+cleaning column, schema evolution, retirement, replay convergence. The input
+streams are in-repo reconstructions of the reference's integration fixtures,
+kept under ``tests/fixtures/``; FIXTURES.md says where each one comes from."""
 
 import hashlib
 import json
+import os
 
 import pytest
 
@@ -12,7 +14,7 @@ from singer_target_clickhouse_spark.config import Config
 from singer_target_clickhouse_spark.engine import RecordBeforeSchemaError, SingerEngine
 from singer_target_clickhouse_spark.schema.translator import PKConsistencyError
 
-DATA = "/root/reference/tests/data"
+DATA = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
 @pytest.fixture()
@@ -68,7 +70,6 @@ def test_short_insert_and_reorder_idempotence(spark, lake):
     # processStream.spec.ts:300-306 + 352-360
     e1 = engine(spark, lake)
     e1.run_file(f"{DATA}/stream_short.jsonl")
-    got = rows(e1, "tickets", "brand_id")
     df = e1.catalog.read("tickets").where("assignee_id = 11").select("brand_id")
     assert [tuple(r) for r in df.collect()] == [(22,)]
     h1 = table_hash(e1, "tickets")
@@ -77,6 +78,7 @@ def test_short_insert_and_reorder_idempotence(spark, lake):
     e2.run_file(f"{DATA}/stream_short_reordered.jsonl")
     df = e2.catalog.read("tickets").where("assignee_id = 11").select("brand_id")
     assert [tuple(r) for r in df.collect()] == [(22,)]
+    assert table_hash(e2, "tickets") == h1
 
 
 def test_replay_convergence_content_hash(spark, lake):

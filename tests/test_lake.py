@@ -13,7 +13,7 @@ from singer_target_clickhouse_spark.streaming import (
     kafka_source_available,
 )
 
-DATA = "/root/reference/tests/data"
+DATA = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
 def test_vacuum_reclaims_superseded_files(spark, tmp_path):
