@@ -450,8 +450,8 @@ class SingerEngine:
         ``vacuum_every_commits`` snapshot ids: bounds on-disk amplification
         over a long replay — each bucket-pruned rewrite strands one
         superseded file set per touched bucket. Every data commit goes
-        through here, so a table committed twice per batch (children: append
-        + orphan delete) still lands on the vacuum ids. ``retain_last=2``
+        through here (a child's batch rewrite, a cleaning wipe or sweep, the
+        root merge), so each lands on the vacuum ids. ``retain_last=2``
         keeps the previous snapshot readable for lazy frames still in flight
         within this batch."""
         self.catalog.commit_snapshot(name, snap)
@@ -639,23 +639,7 @@ class SingerEngine:
                 records, meta, ver_offset=run_base, translate_values=self.config.translate_values
             )
 
-        # Commit children first, root last: the root's last_applied_seq is the
-        # batch barrier, so a replay after a partial crash re-applies only the
-        # tables that didn't commit.
-        for node in meta.walk():
-            if node.table_name == meta.table_name:
-                continue
-            with self._phase("snap_io"):
-                snap = self.catalog.snapshot(node.table_name)
-            if snap.run_id == self.run_id and snap.last_applied_seq >= hi:
-                continue  # replay: this child already has the batch
-            with self._phase("child_append"):
-                snap = M.append_rows(self.catalog, node.table_name, shredded[node.table_name], snap=snap)
-            snap.last_applied_seq = hi
-            snap.run_id = self.run_id
-            with self._phase("commit_io"):
-                self._commit(node.table_name, snap)
-
+        fused = root_snap.engine == "replacing" and meta.children and self.config.orphan_delete_per_batch
         batch_root = shredded[meta.table_name]
         touched: Optional[list[int]] = touched_hint
         if root_snap.engine == "replacing":
@@ -663,8 +647,8 @@ class SingerEngine:
                 batch_root = batch_root.withColumn("__ts", F.lit(False))
                 if deletes is not None:
                     batch_root = batch_root.unionByName(self._tombstones(meta, deletes, run_base))
-            if touched is None and meta.children and self.config.orphan_delete_per_batch:
-                # needed again for the bucket-aligned orphan delete below
+            if touched is None and fused:
+                # needed again for the bucket-aligned child rewrite below
                 touched = self.catalog.touched_buckets(batch_root, root_snap)
             with self._phase("root_merge"):
                 root_snap = M.merge_upsert(
@@ -678,6 +662,26 @@ class SingerEngine:
                 )
             with self._phase("root_merge"):
                 root_snap = M.append_rows(self.catalog, meta.table_name, batch_root, snap=root_snap)
+        # Commit children first, root last: the root's last_applied_seq is the
+        # batch barrier, so a replay after a partial crash re-applies only the
+        # tables that didn't commit. Per-batch D3 (fused): one rewrite per
+        # child adds its batch rows and drops orphans of the root's merge.
+        if fused:
+            root_df = self.catalog.read(meta.table_name, buckets=touched, snap=root_snap)
+        for node in list(meta.walk())[1:]:
+            with self._phase("snap_io"):
+                snap = self.catalog.snapshot(node.table_name)
+            if snap.run_id == self.run_id and snap.last_applied_seq >= hi:
+                continue  # replay: this child already has the batch
+            with self._phase("child_write"):
+                if fused:
+                    snap = self._drop_orphans(meta, node, root_df, touched, snap, shredded[node.table_name])
+                else:
+                    snap = M.append_rows(self.catalog, node.table_name, shredded[node.table_name], snap=snap)
+            snap.last_applied_seq = hi
+            snap.run_id = self.run_id
+            with self._phase("commit_io"):
+                self._commit(node.table_name, snap)
         root_snap.last_applied_seq = hi
         root_snap.run_seq_base = run_base
         root_snap.run_id = self.run_id
@@ -707,24 +711,18 @@ class SingerEngine:
                 }
             )
 
-        # D3 per-batch: clean child orphans in the touched buckets.
-        if self.config.orphan_delete_per_batch and meta.children and root_snap.engine == "replacing":
-            with self._phase("orphan_delete"):
-                self._delete_orphans(meta, buckets=touched)
+    def _delete_orphans(self, meta: TableMeta) -> None:
+        """Reference D3 (StreamProcessor.ts:148-169) over whole tables."""
+        root_df = self.catalog.read(meta.table_name)
+        for node in list(meta.walk())[1:]:
+            self._commit(node.table_name, self._drop_orphans(meta, node, root_df))
 
-    def _delete_orphans(self, meta: TableMeta, buckets: Optional[list[int]] = None) -> None:
-        """Reference D3 (StreamProcessor.ts:148-169), bucket-aligned."""
-        root_pk = [c.name for c in meta.pks_of(PKType.CURRENT)]
-        root_df = self.catalog.read(meta.table_name, buckets=buckets)
-        for node in meta.walk():
-            if node.table_name == meta.table_name:
-                continue
-            child_root_cols = [c.name for c in node.pks_of(PKType.ROOT)]
-            snap = M.orphan_delete(
-                self.catalog, node.table_name, root_df, root_pk, child_root_cols,
-                buckets=buckets, snap=None,
-            )
-            self._commit(node.table_name, snap)
+    def _drop_orphans(self, meta, node, root_df, buckets=None, snap=None, new_rows=None) -> TableSnapshot:
+        return M.orphan_delete(
+            self.catalog, node.table_name, root_df,
+            [c.name for c in meta.pks_of(PKType.CURRENT)], [c.name for c in node.pks_of(PKType.ROOT)],
+            buckets=buckets, snap=snap, new_rows=new_rows,
+        )
 
     def _bucket_probe_expr(self):
         """Per-row bucket id of the record's primary key for every KNOWN

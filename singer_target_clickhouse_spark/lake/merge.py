@@ -125,6 +125,7 @@ def orphan_delete(
     child_root_cols: list[str],
     buckets: Optional[list[int]] = None,
     snap: Optional[TableSnapshot] = None,
+    new_rows: Optional[DataFrame] = None,
 ) -> TableSnapshot:
     """Child-orphan delete (reference D3, ``StreamProcessor.ts:148-169``):
     drop child rows whose (root-key…, _root_ver) has no surviving root row.
@@ -133,9 +134,12 @@ def orphan_delete(
     the root's PK bucketing, so when ``buckets`` (the root buckets touched
     this batch) is given, only those child buckets are read and rewritten and
     ``root_df`` can be pre-restricted to the same buckets by the caller.
+    ``new_rows`` (batch rows, all in ``buckets``) are appended in the same write.
     """
     snap = snap or catalog.snapshot(child_name)
     child = catalog.read(child_name, buckets=buckets, snap=snap)
+    if new_rows is not None:
+        child = child.unionByName(new_rows.select(*child.columns))
     surviving = root_df.select(
         *[F.col(p).alias(c) for p, c in zip(root_pk, child_root_cols)],
         F.col("_ver").alias("_root_ver"),

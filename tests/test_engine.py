@@ -530,6 +530,40 @@ def test_replacing_batch_runs_two_jobs(spark, lake):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
+def test_child_batch_is_one_rewrite(spark, lake):
+    # A steady batch of a replacing root with one child: the child's batch
+    # rows and its per-batch orphan delete go out in one bucket rewrite, so
+    # the child commits one snapshot per batch, and the job count is pinned
+    # like the single-table one above.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        schema = json.dumps({
+            "type": "SCHEMA", "stream": "fc", "schema": {"type": "object", "properties": {
+                "id": {"type": "integer"},
+                "tags": {"type": ["null", "array"], "items": {"type": "object", "properties": {
+                    "t": {"type": ["null", "string"]}}}}}},
+            "key_properties": ["id"]})
+        e = engine(spark, lake)
+
+        def recs(v):
+            return [json.dumps({"type": "RECORD", "stream": "fc",
+                                "record": {"id": i, "tags": [{"t": f"{v}{i}"}]}}) for i in range(10)]
+
+        e.apply_lines(_mk_lines(spark, [schema] + recs("a"), 0))
+        child_snap = e.catalog.snapshot("fc__tags").snapshot_id
+
+        sc = spark.sparkContext
+        sc.setJobGroup("steady-child-batch", "job-count probe", False)
+        e.apply_lines(_mk_lines(spark, recs("b"), 100))
+        jobs = sc.statusTracker().getJobIdsForGroup("steady-child-batch")
+        assert e.catalog.snapshot("fc__tags").snapshot_id == child_snap + 1
+        assert len(jobs) <= 4, f"expected <=4 jobs in a steady child batch, got {len(jobs)}"
+        assert rows(e, "fc__tags", "_root_id", "t") == [(i, f"b{i}") for i in range(10)]
+    finally:
+        spark.sparkContext.setJobGroup("", "", False)
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
 @pytest.mark.parametrize("translate", [False, True])
 def test_bucket_hint_flat_delete_keys_for_nested_path_pk(spark, lake, monkeypatch, translate):
     # A pk prop containing the nested-object separator is extracted NESTED
@@ -682,12 +716,21 @@ def test_orphan_delete_finalize_only_mode_parity(spark, lake, tmp_path):
                             "record": {"id": i, "tags": [{"t": f"v{ver}a{i}"}, {"t": f"v{ver}b{i}"}]}})
                 for i in range(6)]
 
+    # one batch carrying two versions of key 0 with different child arrays,
+    # and a delete of key 1, whose children earlier batches committed: the
+    # per-batch rewrite semi-joins against the root's uncommitted merge
+    last = [json.dumps({"type": "RECORD", "stream": "po",
+                        "record": {"id": 0, "tags": [{"t": "x1"}, {"t": "x2"}, {"t": "x3"}]}}),
+            json.dumps({"type": "RECORD", "stream": "po", "record": {"id": 0, "tags": [{"t": "y1"}]}}),
+            json.dumps({"type": "DELETED_RECORD", "stream": "po", "record": {"id": 1}})]
+
     hashes = {}
     for mode in (True, False):
         root = str(tmp_path / f"m{mode}")
         e = engine(spark, root, orphan_delete_per_batch=mode)
         e.apply_lines(_mk_lines(spark, [schema] + batch(1), 0))
         e.apply_lines(_mk_lines(spark, batch(2), 100))
+        e.apply_lines(_mk_lines(spark, last, 200))
         e.finalize()
         hashes[mode] = (table_hash(e, "po"), table_hash(e, "po__tags"))
         # superseded root versions must leave no child orphans either way
@@ -697,6 +740,9 @@ def test_orphan_delete_finalize_only_mode_parity(spark, lake, tmp_path):
             root_df.selectExpr("id as _root_id", "_ver as _root_ver"),
             ["_root_id", "_root_ver"], "left_anti").count()
         assert orphans == 0
+        got = rows(e, "po__tags", "_root_id", "t")
+        assert [t for i, t in got if i == 0] == ["y1"]
+        assert [t for i, t in got if i == 1] == []
     assert hashes[True] == hashes[False]
 
 

@@ -158,9 +158,9 @@ def test_auto_vacuum_bounds_storage(spark, tmp_path):
 
 
 def test_auto_vacuum_bounds_child_storage(spark, tmp_path):
-    # a child table commits twice per batch (append, then the per-batch
-    # orphan delete); auto-vacuum must still fire on it and keep its on-disk
-    # parquet bounded like the root's
+    # a child table commits once per batch (its touched buckets rewritten
+    # with the batch rows and without orphans); auto-vacuum must fire on it
+    # and keep its on-disk parquet bounded like the root's
     lake = str(tmp_path / "lakeAVC")
     e = SingerEngine(spark, Config(lake_root=lake, n_buckets=2, vacuum_every_commits=2))
     schema = json.dumps({
@@ -187,8 +187,8 @@ def test_auto_vacuum_bounds_child_storage(spark, tmp_path):
     assert child in e.catalog.list_tables()
 
     # every batch strands a superseded file set per bucket on the child
-    # (append + orphan-delete rewrite); without vacuum that grows with the
-    # batch count, with it at most ~3 generations stay on disk
+    # (its bucket rewrite); without vacuum that grows with the batch count,
+    # with it at most ~3 generations stay on disk
     assert _parquet_count(lake, child) <= 3 * 2
     got = sorted((r["x"],) for r in e.catalog.read(child).collect())
     assert got == [(n_batches - 1,)] * 8 + [(n_batches,)] * 8
