@@ -47,8 +47,10 @@ class Config:
     n_buckets: int = 32
 
     #: Run the child-orphan delete (reference D3, ``StreamProcessor.ts:148-169``)
-    #: after every batch instead of only at finalize. Keeps child tables
-    #: always-consistent; cost is bounded by the touched root buckets.
+    #: after every batch instead of only at finalize, in the same bucket
+    #: rewrite that adds the batch's child rows (one commit per child per
+    #: batch). Keeps child tables always-consistent; cost is bounded by the
+    #: touched root buckets.
     orphan_delete_per_batch: bool = True
 
     #: Assert PK uniqueness after finalize (reference D7,

@@ -134,7 +134,8 @@ def orphan_delete(
     the root's PK bucketing, so when ``buckets`` (the root buckets touched
     this batch) is given, only those child buckets are read and rewritten and
     ``root_df`` can be pre-restricted to the same buckets by the caller.
-    ``new_rows`` (batch rows, all in ``buckets``) are appended in the same write.
+    ``new_rows`` (batch rows, all in ``buckets``) join the child rows before
+    the semi-join, so one write appends the batch and drops the orphans.
     """
     snap = snap or catalog.snapshot(child_name)
     child = catalog.read(child_name, buckets=buckets, snap=snap)

@@ -11,6 +11,7 @@ import pytest
 from singer_target_clickhouse_spark.config import Config
 from singer_target_clickhouse_spark.engine import SingerEngine
 from singer_target_clickhouse_spark.gen import REPO_SCHEMA_MESSAGE, REPO_STREAM
+from singer_target_clickhouse_spark.lake.catalog import LakeCatalog
 from singer_target_clickhouse_spark.streaming import StreamingDriver
 
 
@@ -144,8 +145,6 @@ def _tk_run(spark, root, mp=None, calls=None, crash=None):
 
 def _lake_digest(spark, lake):
     """sha256 of every table (all columns, ``_ver`` included) plus ``_state.json``."""
-    from singer_target_clickhouse_spark.lake.catalog import LakeCatalog
-
     cat = LakeCatalog(lake, spark)
     out = {}
     for t in cat.list_tables():
