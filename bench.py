@@ -115,14 +115,22 @@ def bench_cdc_replay(spark, sf_dir: str):
     driver.run_available()
     elapsed = time.time() - t0
     rows = driver.engine.catalog.row_count(REPO_STREAM)
-    bt = list(driver.batch_times)  # deque (bounded log) -> list for slicing
+    # one engine record per micro-batch, in apply order
+    with open(os.path.join(lake, "_metrics", "batches.jsonl")) as fh:
+        recs = [json.loads(line) for line in fh]
+    bt = [r["wall_end"] - r["wall_start"] for r in recs]
     steady = sorted(bt[1:] or bt)
     median = steady[len(steady) // 2]
     per_batch = (n + 1) / max(len(bt), 1)
-    phases = [
-        {k: round(v, 2) for k, v in ph.items() if v >= 0.01}
-        for ph in driver.batch_phase_log
-    ]
+    phases = []
+    for i, r in enumerate(recs):
+        ph = dict(r["phases"], batch_total=bt[i], wall_start=r["wall_start"],
+                  wall_end=r["wall_end"])
+        if i:
+            # streaming overhead between batches: source listing, offset and
+            # commit log writes
+            ph["trigger_gap"] = r["wall_start"] - recs[i - 1]["wall_end"]
+        phases.append({k: round(v, 2) for k, v in ph.items() if v >= 0.01})
     return elapsed, {
         "events": n + 1,
         "events_per_sec": round((n + 1) / elapsed, 1),

@@ -2,9 +2,9 @@
 
 Mirrors the reference's ``src/Config.ts`` knobs where they still make sense on
 Spark, and adds the Spark-native ones (bucket count, per-batch orphan delete,
-merge concurrency, lineage metrics, cleaning-value cap, auto-vacuum). The
-reference's row-buffering knobs (``batch_size``, ``insert_stream_timeout``)
-have no field here: micro-batch triggers subsume them.
+merge concurrency, cleaning-value cap, auto-vacuum). The reference's
+row-buffering knobs (``batch_size``, ``insert_stream_timeout``) have no field
+here: micro-batch triggers subsume them.
 
 Note the reference defines ``finalize_concurrency`` (default 3,
 ``src/Config.ts:32``) but its finalize pool actually uses ``batch_size``
@@ -68,10 +68,6 @@ class Config:
     #: (the reference's stream_1 shape is 21 tables) keeps the cluster busy
     #: instead of idling between per-stream driver barriers. 1 = serial.
     merge_concurrency: int = 4
-
-    #: Emit per-batch per-table lineage records (source offset range, rows,
-    #: merge stats) to ``<lake>/_metrics/metrics.jsonl``.
-    emit_lineage: bool = True
 
     #: Hard cap on distinct RAW TEXT cleaning-column values collected per
     #: batch (falsy values count toward the cap; a text appearing as both

@@ -33,7 +33,6 @@ import os
 import threading
 import time
 import uuid
-from collections import deque
 from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -79,22 +78,6 @@ class RecordBeforeSchemaError(RuntimeError):
 
 #: sentinel distinguishing "not cached yet" from a cached None (not probeable)
 _PROBE_UNCACHED = object()
-
-#: bound on the in-memory per-batch instrumentation logs (engine.batch_phases,
-#: StreamingDriver.batch_times / batch_phase_log): big enough for any bench
-#: run, finite for a weeks-long streaming driver
-PHASE_LOG_MAXLEN = 512
-
-
-class _PhaseAcc(dict):
-    """Thread-safe phase -> seconds accumulator (per-stream merges run from a
-    thread pool; a bare dict += would lose updates)."""
-
-    _lock = threading.Lock()
-
-    def add(self, name: str, dt: float) -> None:
-        with self._lock:
-            self[name] = self.get(name, 0.0) + dt
 
 
 def with_line_offsets(df: DataFrame, value_col: str = "value") -> tuple[DataFrame, int]:
@@ -253,17 +236,10 @@ class SingerEngine:
         self.catalog = LakeCatalog(self.config.lake_root, spark)
         self.run_id = run_id or uuid.uuid4().hex
         self.streams: dict[str, StreamState] = {}
-        #: per-batch wall-clock attribution of the driver-side serial window:
-        #: one dict of phase -> seconds appended per ``apply_lines`` call.
-        #: Phases whose work is distributed ("stats", "write" inside
-        #: root_merge) appear with their full wall time. Bounded (round-4
-        #: ADVICE): a long-lived streaming driver must not grow an unbounded
-        #: in-memory log — durable per-batch records go to the lineage
-        #: metrics jsonl; this deque keeps the recent window bench.py reads.
-        self.batch_phases: "deque[dict[str, float]]" = deque(maxlen=PHASE_LOG_MAXLEN)
-        self._ph = _PhaseAcc()
+        #: the metrics record of the ``apply_lines`` call in progress; pool
+        #: threads add to it under ``_metrics_lock``
+        self._batch: Optional[dict] = None
         self._metrics_lock = threading.Lock()
-        self.catalog.phase_sink = self._ph
         #: per-stream probe branches cached across batches (Column exprs are
         #: immutable): building one reads the table snapshot and constructs
         #: the pk from_json + coercion tree, which at 21 streams cost ~3 s of
@@ -274,31 +250,27 @@ class SingerEngine:
 
     @contextmanager
     def _phase(self, name: str):
+        """Add the wall seconds of the block to the batch record's phase
+        ``name``, summed over the pool threads that run it."""
         t0 = time.perf_counter()
         try:
             yield
         finally:
-            self._ph.add(name, time.perf_counter() - t0)
+            dt = time.perf_counter() - t0
+            phases = self._batch["phases"]
+            with self._metrics_lock:
+                phases[name] = phases.get(name, 0.0) + dt
 
-    # ---------------------------------------------------------------- lineage
-    def _emit_metrics(self, record: dict) -> None:
-        """Per-batch per-table lineage record (north-star requirement):
-        source offset range, rows applied, merge stats — appended to
-        ``<lake>/_metrics/metrics.jsonl`` so operators can audit exactly
-        which offsets produced which table snapshot. Locked: per-stream
-        merges emit from ``merge_concurrency`` pool threads, and while
-        single small buffered writes are atomic in practice on POSIX, the
-        lock makes one-line-per-record guaranteed (round-4 ADVICE)."""
-        d = os.path.join(self.config.lake_root, "_metrics")
-        os.makedirs(d, exist_ok=True)
-        line = json.dumps(record) + "\n"
-        with self._metrics_lock:
-            with open(os.path.join(d, "metrics.jsonl"), "a") as fh:
-                fh.write(line)
+    # ---------------------------------------------------------------- metrics
+    def _metrics_path(self) -> str:
+        return os.path.join(self.config.lake_root, "_metrics", "batches.jsonl")
 
     def read_metrics(self) -> "DataFrame":
-        path = os.path.join(self.config.lake_root, "_metrics", "metrics.jsonl")
-        return self.spark.read.json(path)
+        """The batch records, one row per ``apply_lines`` call: ``run_id``,
+        ``wall_start``/``wall_end`` (epoch seconds), ``phases`` (seconds per
+        phase) and ``streams`` (one lineage entry per stream applied: its
+        source offset range, root snapshot and rows written)."""
+        return self.spark.read.json(self._metrics_path())
 
     # ------------------------------------------------------------- DDL layer
     def _ch_columns_for(self, meta: TableMeta) -> list[dict]:
@@ -660,6 +632,9 @@ class SingerEngine:
 
         fused = root_snap.engine == "replacing" and meta.children and self.config.orphan_delete_per_batch
         batch_root = shredded[meta.table_name]
+        # lineage counts the rows of the files this batch writes to the root,
+        # never the whole table (an append-only root has no touched buckets)
+        old_files = set(root_snap.files())
         touched: Optional[list[int]] = touched_hint
         if root_snap.engine == "replacing":
             with self._phase("plan_build"):
@@ -706,29 +681,27 @@ class SingerEngine:
         root_snap.run_id = self.run_id
         with self._phase("commit_io"):
             self._commit(meta.table_name, root_snap)
-        if self.config.emit_lineage:
-            # parquet footers read driver-side: lineage adds NO Spark job
-            with self._phase("lineage"):
-                rows_after = self.catalog.footer_row_count(
-                    meta.table_name, buckets=touched, snap=root_snap
-                )
-            self._emit_metrics(
-                {
-                    "run_id": self.run_id,
-                    "stream": meta.prop,
-                    "table": meta.table_name,
-                    "seq_lo": lo,
-                    "seq_hi": hi,
-                    "snapshot_id": root_snap.snapshot_id,
-                    "engine": root_snap.engine,
-                    "buckets_touched": len(touched) if touched is not None else None,
-                    "rows_in_touched_buckets": rows_after,
-                    "wall_sec": round(time.time() - t_start, 3),
-                    # which pool thread applied this stream: audit evidence
-                    # that multi-stream batches actually overlap
-                    "thread": threading.current_thread().name,
-                }
+        # parquet footers read driver-side: lineage adds NO Spark job
+        with self._phase("lineage"):
+            rows_after = self.catalog.footer_row_count(
+                meta.table_name, [f for f in root_snap.files() if f not in old_files]
             )
+        entry = {
+            "stream": meta.prop,
+            "table": meta.table_name,
+            "seq_lo": lo,
+            "seq_hi": hi,
+            "snapshot_id": root_snap.snapshot_id,
+            "engine": root_snap.engine,
+            "buckets_touched": len(touched) if touched is not None else None,
+            "rows_in_touched_buckets": rows_after,
+            "wall_sec": round(time.time() - t_start, 3),
+            # which pool thread applied this stream: audit evidence that
+            # multi-stream batches actually overlap
+            "thread": threading.current_thread().name,
+        }
+        with self._metrics_lock:
+            self._batch["streams"].append(entry)
 
     def _delete_orphans(self, meta: TableMeta) -> None:
         """Reference D3 (StreamProcessor.ts:148-169) over whole tables."""
@@ -845,7 +818,16 @@ class SingerEngine:
         single job returns the (rare) control messages AND the per-stream
         seq-bound/delete-count stats, grouped-aggregated map-side. The
         record/delete payloads never leave the executors.
+
+        Each call, failed ones included, appends one JSON record to
+        ``<lake>/_metrics/batches.jsonl`` (``read_metrics``). It is written
+        driver-side, so it adds no Spark job.
         """
+        self._batch = {
+            "run_id": self.run_id, "wall_start": time.time(), "wall_end": None,
+            "phases": {}, "streams": [],
+        }
+        t_batch = time.perf_counter()
         # `raw` (the full line) is only needed for the rare control messages;
         # nulling it for data rows halves the cached bytes per batch — the
         # cache is re-read by every per-stream merge plan, so this is a
@@ -862,9 +844,6 @@ class SingerEngine:
             ).alias("raw"),
         )
         parsed = parsed.cache()
-        self._ph = _PhaseAcc()
-        self.catalog.phase_sink = self._ph
-        t_batch = time.perf_counter()
         try:
             self._apply_parsed(parsed)
         finally:
@@ -872,8 +851,13 @@ class SingerEngine:
             # batches must not accumulate leaked cache blocks
             with self._phase("unpersist"):
                 parsed.unpersist()
-            self._ph.add("engine_total", time.perf_counter() - t_batch)
-            self.batch_phases.append(dict(self._ph))
+            record = self._batch
+            record["phases"]["engine_total"] = time.perf_counter() - t_batch
+            record["wall_end"] = time.time()
+            path = self._metrics_path()
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            with open(path, "a") as fh:
+                fh.write(json.dumps(record) + "\n")
 
     def _apply_parsed(self, parsed: DataFrame) -> None:
         # union of three tiny projections: SCHEMA/ACTIVE_STREAMS rows carry
@@ -883,29 +867,28 @@ class SingerEngine:
         # aggregates INCLUDING the touched-bucket set (``_bucket_probe_expr``)
         # — one action for all of it, which also materializes the parse cache
         # the merges below reuse.
-        t_plan = time.perf_counter()
-        no_buckets = F.lit(None).cast("array<int>").alias("buckets")
-        control_df = parsed.where(
-            F.col("type").isin("SCHEMA", "ACTIVE_STREAMS")
-        ).select(F.col("type"), F.col("stream"), F.col("raw"), F.col(SEQ_COL).alias("lo"),
-                 F.col(SEQ_COL).alias("hi"), F.lit(1).alias("n"), no_buckets)
-        state_df = (
-            parsed.where(F.col("type") == "STATE")
-            .agg(F.max_by("raw", F.col(SEQ_COL)).alias("raw"), F.max(SEQ_COL).alias("lo"))
-            .where(F.col("raw").isNotNull())
-            .select(F.lit("STATE").alias("type"), F.lit(None).cast("string").alias("stream"),
-                    F.col("raw"), F.col("lo"), F.col("lo").alias("hi"),
-                    F.lit(1).alias("n"), no_buckets)
-        )
-        stats_df = (
-            parsed.where(~F.col("type").isin("SCHEMA", "STATE", "ACTIVE_STREAMS") | F.col("type").isNull())
-            .groupBy("stream", "type")
-            .agg(F.min(SEQ_COL).alias("lo"), F.max(SEQ_COL).alias("hi"), F.count("*").alias("n"),
-                 F.collect_set(self._bucket_probe_expr()).alias("buckets"))
-            .select(F.col("type"), F.col("stream"), F.lit(None).cast("string").alias("raw"),
-                    "lo", "hi", "n", "buckets")
-        )
-        self._ph.add("stats_plan", time.perf_counter() - t_plan)
+        with self._phase("stats_plan"):
+            no_buckets = F.lit(None).cast("array<int>").alias("buckets")
+            control_df = parsed.where(
+                F.col("type").isin("SCHEMA", "ACTIVE_STREAMS")
+            ).select(F.col("type"), F.col("stream"), F.col("raw"), F.col(SEQ_COL).alias("lo"),
+                     F.col(SEQ_COL).alias("hi"), F.lit(1).alias("n"), no_buckets)
+            state_df = (
+                parsed.where(F.col("type") == "STATE")
+                .agg(F.max_by("raw", F.col(SEQ_COL)).alias("raw"), F.max(SEQ_COL).alias("lo"))
+                .where(F.col("raw").isNotNull())
+                .select(F.lit("STATE").alias("type"), F.lit(None).cast("string").alias("stream"),
+                        F.col("raw"), F.col("lo"), F.col("lo").alias("hi"),
+                        F.lit(1).alias("n"), no_buckets)
+            )
+            stats_df = (
+                parsed.where(~F.col("type").isin("SCHEMA", "STATE", "ACTIVE_STREAMS") | F.col("type").isNull())
+                .groupBy("stream", "type")
+                .agg(F.min(SEQ_COL).alias("lo"), F.max(SEQ_COL).alias("hi"), F.count("*").alias("n"),
+                     F.collect_set(self._bucket_probe_expr()).alias("buckets"))
+                .select(F.col("type"), F.col("stream"), F.lit(None).cast("string").alias("raw"),
+                        "lo", "hi", "n", "buckets")
+            )
         with self._phase("stats_job"):
             rows = control_df.unionByName(state_df).unionByName(stats_df).collect()
 

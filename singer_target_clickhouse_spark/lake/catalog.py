@@ -125,23 +125,7 @@ class LakeCatalog:
     def __init__(self, root: str, spark: SparkSession):
         self.root = root
         self.spark = spark
-        #: optional dict[str, float] the engine points at its per-batch phase
-        #: accumulator; when set, write/commit walls are attributed into it
-        #: (per-batch phase instrumentation, zero overhead when unset)
-        self.phase_sink: Optional[dict] = None
         os.makedirs(self._tables_dir, exist_ok=True)
-
-    def _note(self, phase: str, t0: float) -> None:
-        sink = self.phase_sink
-        if sink is not None:
-            import time
-
-            dt = time.perf_counter() - t0
-            add = getattr(sink, "add", None)
-            if add is not None:  # engine's thread-safe accumulator
-                add(phase, dt)
-            else:
-                sink[phase] = sink.get(phase, 0.0) + dt
 
     # ------------------------------------------------------------------ paths
     @property
@@ -209,13 +193,6 @@ class LakeCatalog:
 
     def _commit(self, name: str, snap: TableSnapshot) -> None:
         """Atomically publish a snapshot: manifest first, then pointer flip."""
-        import time
-
-        t0 = time.perf_counter()
-        self._commit_inner(name, snap)
-        self._note("commit_flip", t0)
-
-    def _commit_inner(self, name: str, snap: TableSnapshot) -> None:
         tdir = self._table_dir(name)
         manifest = f"snap-{snap.snapshot_id:06d}.json"
         with open(os.path.join(tdir, manifest), "w") as fh:
@@ -251,23 +228,14 @@ class LakeCatalog:
     def row_count(self, name: str) -> int:
         return self.read(name).count()
 
-    def footer_row_count(
-        self,
-        name: str,
-        buckets: Optional[list[int]] = None,
-        snap: Optional[TableSnapshot] = None,
-    ) -> int:
-        """Row count from parquet footer metadata, read driver-side with
-        pyarrow — zero Spark jobs. Used by the per-batch lineage emitter so
-        lineage costs no scheduler round-trip (a batch is a handful of
-        bucket files; footer reads are O(files) small local IO)."""
+    def footer_row_count(self, name: str, files: list[str]) -> int:
+        """Row count of the table-relative parquet ``files`` from their footer
+        metadata, read driver-side with pyarrow — zero Spark jobs. Used by
+        the per-batch lineage so it costs no scheduler round-trip (a batch
+        writes a handful of bucket files; footer reads are small local IO)."""
         import pyarrow.parquet as pq
 
-        snap = snap or self.snapshot(name)
-        total = 0
-        for f in self._abs_files(name, snap.files(buckets)):
-            total += pq.ParquetFile(f).metadata.num_rows
-        return total
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in self._abs_files(name, files))
 
     # ----------------------------------------------------------------- writes
     @staticmethod
@@ -303,12 +271,7 @@ class LakeCatalog:
             # commit w-fold, growing every later merge's small-file read and
             # regressing end-to-end throughput.
             bucketed = bucketed.repartition(F.col("_bucket"))
-        import time
-
-        t0 = time.perf_counter()
         bucketed.write.partitionBy("_bucket").parquet(out_dir, mode="overwrite")
-        self._note("write_job", t0)
-        t0 = time.perf_counter()
         written: dict[str, list[str]] = {}
         for entry in os.listdir(out_dir):
             if not entry.startswith("_bucket="):
@@ -321,7 +284,6 @@ class LakeCatalog:
             ]
             if files:
                 written[b] = files
-        self._note("write_listdir", t0)
         return written
 
     def touched_buckets(self, df: DataFrame, snap: TableSnapshot) -> list[int]:

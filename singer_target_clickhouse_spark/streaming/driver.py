@@ -44,9 +44,10 @@ class StreamingDriver:
     ):
         """``offsets_in_log=True`` declares the log format carries its own
         offsets (lines are ``<seq>\\tmessage``, like a binlog position /
-        Kafka offset) — `_seq` is then recovered with a JVM-side split, the
-        scalable path. Plain logs fall back to zipWithIndex (per-row Python
-        serialization — fine for fixtures, not for 10^10 events)."""
+        Kafka offset) — `_seq` is then recovered with a JVM-side split, with
+        no sidecar state. Plain logs number their lines JVM-side too
+        (``with_line_offsets``: one extra count job per batch, no per-row
+        Python) and keep a per-batch sequence base in ``seq_base.json``."""
         self.spark = spark
         self.config = config
         self.input_dir = input_dir
@@ -55,24 +56,6 @@ class StreamingDriver:
         self.offsets_in_log = offsets_in_log
         os.makedirs(checkpoint_dir, exist_ok=True)
         self.engine = SingerEngine(spark, config, run_id=self._pinned_run_id())
-        from collections import deque
-
-        from ..engine import PHASE_LOG_MAXLEN
-
-        #: wall seconds per processed micro-batch (read by bench.py).
-        #: Bounded like engine.batch_phases (round-4 ADVICE): a long-lived
-        #: streaming driver must not grow unbounded in-memory logs.
-        self.batch_times: "deque[float]" = deque(maxlen=PHASE_LOG_MAXLEN)
-        #: per-batch phase attribution: the engine's serial-window phases
-        #: plus the streaming trigger overhead between batches
-        #: (``trigger_gap`` = wall between previous batch end and this batch
-        #: entering foreachBatch: source listing, offset/commit WAL writes)
-        #: plus absolute epoch timestamps ``wall_start``/``wall_end`` of the
-        #: batch window, so an outside observer need not reconstruct it from
-        #: process launch time (which would include imports, JVM start and
-        #: stream init).
-        self.batch_phase_log: "deque[dict[str, float]]" = deque(maxlen=PHASE_LOG_MAXLEN)
-        self._last_batch_end: float = 0.0
 
     # ------------------------------------------------------------- run-id pin
     def _pinned_run_id(self) -> str:
@@ -108,30 +91,6 @@ class StreamingDriver:
 
     # ------------------------------------------------------------------ batch
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        t0 = _time.time()
-        # identity of the last record, not deque length (round-5 ADVICE): the
-        # phase log is a bounded deque, so once saturated its length stops
-        # growing and a length comparison would report an empty phase dict for
-        # every batch of exactly the long-lived drivers the bound targets
-        prev_last = self.engine.batch_phases[-1] if self.engine.batch_phases else None
-        try:
-            self._apply_batch_inner(batch, batch_id)
-        finally:
-            end = _time.time()
-            self.batch_times.append(end - t0)
-            cur_last = self.engine.batch_phases[-1] if self.engine.batch_phases else None
-            ph = dict(cur_last) if cur_last is not None and cur_last is not prev_last else {}
-            ph["batch_total"] = end - t0
-            ph["wall_start"] = t0
-            ph["wall_end"] = end
-            if self._last_batch_end:
-                ph["trigger_gap"] = t0 - self._last_batch_end
-            self._last_batch_end = end
-            self.batch_phase_log.append(ph)
-
-    def _apply_batch_inner(self, batch: DataFrame, batch_id: int) -> None:
         if self.offsets_in_log:
             # The log carries durable offsets (binlog/Kafka style): recover
             # them JVM-side — no Python in the row path, replay-stable by
@@ -233,7 +192,7 @@ class KafkaStreamingDriver(StreamingDriver):
             reader = reader.option("maxOffsetsPerTrigger", self.max_offsets_per_trigger)
         return reader.load()
 
-    def _apply_batch_inner(self, batch: DataFrame, batch_id: int) -> None:
+    def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         # Structural single-partition guard (advisor round 2): offsets are
         # globally unique only within one partition, so ANY partition other
         # than 0 — even in a batch that happens to contain a single partition

@@ -65,7 +65,7 @@ def test_kafka_batch_mapping(spark, tmp_path):
         {"type": "RECORD", "stream": "k", "record": {"id": 1, "v": "a"}},
         {"type": "RECORD", "stream": "k", "record": {"id": 1, "v": "b"}},
     ]
-    drv._apply_batch_inner(_kafka_batch(spark, msgs), 0)
+    drv._apply_batch(_kafka_batch(spark, msgs), 0)
     got = [(r["id"], r["v"]) for r in drv.engine.catalog.read("k").select("id", "v").collect()]
     assert got == [(1, "b")]
 
@@ -78,7 +78,7 @@ def test_kafka_multi_partition_rejected(spark, tmp_path):
     rows = [(b"{}", 0, 0), (b"{}", 0, 1)]
     batch = spark.createDataFrame(rows, "value binary, offset long, partition int")
     with pytest.raises(ValueError, match="partition"):
-        drv._apply_batch_inner(batch, 0)
+        drv._apply_batch(batch, 0)
 
 
 def test_kafka_probe_is_bool(spark):
@@ -95,7 +95,7 @@ def test_kafka_nonzero_partition_rejected_even_if_single(spark, tmp_path):
     )
     batch = _kafka_batch(spark, [{"type": "STATE", "value": {}}], partition=1)
     with pytest.raises(ValueError, match="partition"):
-        drv._apply_batch_inner(batch, 0)
+        drv._apply_batch(batch, 0)
 
 
 def test_vacuum_retain_last_keeps_previous_snapshot(spark, tmp_path):

@@ -46,14 +46,16 @@ def test_streaming_apply_and_resume(spark, tmp_path):
     assert eng.catalog.row_count(REPO_STREAM) == 2
     assert eng.read_state() == {"pos": 1}
 
-    # absolute per-batch wall windows (round-4 ADVICE: windows reconstructed
-    # from process launch were shifted by the pre-first-batch startup interval)
+    # absolute per-batch wall windows in the engine's batch records (round-4
+    # ADVICE: windows reconstructed from process launch were shifted by the
+    # pre-first-batch startup interval)
     import time as _time
-    assert d1.batch_phase_log, "expected at least one batch phase record"
-    for ph in d1.batch_phase_log:
-        assert ph["wall_start"] < ph["wall_end"] <= _time.time()
-        assert abs((ph["wall_end"] - ph["wall_start"]) - ph["batch_total"]) < 0.01
-    starts = [ph["wall_start"] for ph in d1.batch_phase_log]
+    with open(os.path.join(lake, "_metrics", "batches.jsonl")) as fh:
+        recs = [json.loads(line) for line in fh]
+    assert recs, "expected at least one batch record"
+    for r in recs:
+        assert r["wall_start"] < r["wall_end"] <= _time.time()
+    starts = [r["wall_start"] for r in recs]
     assert starts == sorted(starts)
 
     # new file arrives; a NEW driver instance (process restart) resumes from
