@@ -768,7 +768,7 @@ def test_multi_stream_pool_failure_aborts_batch(spark, lake, tmp_path):
         e.apply_lines(_mk_lines(spark, [schema_ok, schema_bad] + ok + bad, 0))
 
 
-def test_one_metrics_record_per_batch(spark, lake, tmp_path):
+def test_one_metrics_record_per_batch(spark, lake):
     # Each apply_lines call leaves exactly one line in _metrics/batches.jsonl,
     # even when a 4-stream batch merges from merge_concurrency pool threads:
     # the phases summed over those threads, and one lineage entry per stream
