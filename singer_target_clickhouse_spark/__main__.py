@@ -9,13 +9,14 @@ Streaming tail (file-backed change log + checkpoint):
         --stream-dir /path/to/log --checkpoint /path/to/ckpt [--offsets-in-log]
 
 The reference reads stdin by default (``index.ts:20``); pass ``--input -``
-for the same behavior (lines are staged to a temp file first — Spark needs a
-seekable source).
+for the same behavior (lines are staged to a temp file, removed when the run
+ends — Spark needs a seekable source).
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import tempfile
 
@@ -76,8 +77,12 @@ def main(argv=None) -> int:
                     for line in sys.stdin:
                         fh.write(line)
                     path = fh.name
-            engine = SingerEngine(spark, cfg)
-            engine.run_file(path)
+            try:
+                engine = SingerEngine(spark, cfg)
+                engine.run_file(path)
+            finally:
+                if args.input == "-":
+                    os.remove(path)
             state = engine.read_state()
             if state is not None:
                 # echo committed state for the tap (reference index.ts:21-22)

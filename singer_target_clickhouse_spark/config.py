@@ -49,8 +49,9 @@ class Config:
     #: Run the child-orphan delete (reference D3, ``StreamProcessor.ts:148-169``)
     #: after every batch instead of only at finalize, in the same bucket
     #: rewrite that adds the batch's child rows (one commit per child per
-    #: batch). Keeps child tables always-consistent; cost is bounded by the
-    #: touched root buckets.
+    #: batch). Orphans are judged from the batch's own root rows, so the
+    #: rewrites run beside the root merge rather than after it. Keeps child
+    #: tables always-consistent; cost is bounded by the touched root buckets.
     orphan_delete_per_batch: bool = True
 
     #: Assert PK uniqueness after finalize (reference D7,
@@ -62,11 +63,13 @@ class Config:
     #: independent Spark jobs).
     finalize_concurrency: int = 3
 
-    #: How many streams' merges run concurrently WITHIN a batch (driver-side
-    #: thread pool, the finalize pattern): per-stream merges touch disjoint
-    #: tables and share only the read-only parse cache, so a multi-stream tap
-    #: (the reference's stream_1 shape is 21 tables) keeps the cluster busy
-    #: instead of idling between per-stream driver barriers. 1 = serial.
+    #: How many streams' merges run concurrently WITHIN a batch, and how many
+    #: table writes of one stream (its root merge and child rewrites) run
+    #: concurrently (driver-side thread pools, the finalize pattern): the
+    #: writes touch disjoint tables and share only the read-only parse
+    #: cache, so a multi-stream tap (the reference's stream_1 shape is 21
+    #: tables) or a root with several children keeps the cluster busy
+    #: instead of idling between per-table driver barriers. 1 = serial.
     merge_concurrency: int = 4
 
     #: Hard cap on distinct RAW TEXT cleaning-column values collected per

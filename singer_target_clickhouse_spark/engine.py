@@ -7,8 +7,10 @@ offset) is applied as:
 1. control messages (SCHEMA / STATE / ACTIVE_STREAMS) are collected
    driver-side (they are rare); RECORD / DELETED_RECORD stay distributed;
 2. per stream: cleaning-column wipes for first-seen values (reference D5),
-   then shred (``shred.shred_stream``) and per-table MERGE/append, children
-   committed before the root so a crash replays only the not-yet-committed
+   then shred (``shred.shred_stream``) and one write per table — the root's
+   MERGE/append and each child's rewrite (or append) run concurrently, since
+   a child's orphans are judged from the batch alone — then the commits,
+   children before the root so a crash replays only the not-yet-committed
    tables;
 3. buffered hard deletes (reference D4) apply after the inserts of the same
    commit window, matching the reference's flush order
@@ -38,6 +40,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Optional
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -130,15 +133,16 @@ def with_line_offsets(df: DataFrame, value_col: str = "value") -> tuple[DataFram
     return out, total
 
 
-def _run_all(fn, items: list, workers: int) -> None:
-    """Call ``fn(item)`` for every item: in order when there is at most one
-    item or one worker, else from a pool of ``workers`` threads. The first
-    failure cancels the items not yet started and re-raises; items already
-    running drain first (threads cannot be interrupted)."""
+def _run_all(spark: SparkSession, fn, items: list, workers: int) -> list:
+    """Return ``[fn(item) for item in items]``: computed in order when there
+    is at most one item or one worker, else from a pool of ``workers``
+    threads that carry the caller's Spark local properties (job group,
+    description), so their jobs count and cancel with the caller's. The
+    first failure cancels the items not yet started and re-raises; items
+    already running drain first (threads cannot be interrupted)."""
     if len(items) <= 1 or workers <= 1:
-        for item in items:
-            fn(item)
-        return
+        return [fn(item) for item in items]
+    fn = inheritable_thread_target(spark)(fn)
     with ThreadPoolExecutor(max_workers=workers) as pool:
         futs = [pool.submit(fn, item) for item in items]
         done, _ = wait(futs, return_when=FIRST_EXCEPTION)
@@ -146,6 +150,7 @@ def _run_all(fn, items: list, workers: int) -> None:
         if failed:
             pool.shutdown(cancel_futures=True)
             raise failed[0].exception()
+        return [f.result() for f in futs]
 
 
 def _is_falsy_cleaning_value(v: str, variant_type: Optional[str]) -> bool:
@@ -513,6 +518,15 @@ class SingerEngine:
         run_base, gate = self._run_base(root_snap, lo)
         if hi <= gate:
             return  # whole batch already applied (replay)
+        # The per-batch child rewrite judges orphans from the batch alone,
+        # which needs every batch _ver (the lowest is run_base + gate + 2)
+        # above every committed root _ver. _run_base guarantees it; a
+        # violation would silently keep orphans, so fail instead.
+        if run_base + gate + 2 <= root_snap.run_seq_base + root_snap.last_applied_seq + 1:
+            raise RuntimeError(
+                f"[{meta.prop}] batch versions from {run_base + gate + 2} do not exceed "
+                f"the committed root's {root_snap.run_seq_base + root_snap.last_applied_seq + 1}"
+            )
         records = records.where(F.col(SEQ_COL) > gate)
         if deletes is not None:
             deletes = deletes.where(F.col(SEQ_COL) > gate)
@@ -598,18 +612,12 @@ class SingerEngine:
                     # (reference finalize deleteChildDuplicates semantics).
                     self._delete_orphans(meta)
 
-        multi_node = len(meta.children) > 0
-        if multi_node:
-            # Re-used by every table node's plan; single-node streams skip the
-            # materialization (one write consumes the records exactly once).
-            records = records.cache()
-        try:
-            self._merge_stream_tables(
-                state, records, deletes, lo, hi, run_base, t_start, touched_hint,
-            )
-        finally:
-            if multi_node:
-                records.unpersist()
+        # The stream's records are not cached: its table writes run at once
+        # and each would start its own job to fill the empty cache. They
+        # read the batch's parse cache.
+        self._merge_stream_tables(
+            state, records, deletes, lo, hi, run_base, t_start, touched_hint,
+        )
 
     def _merge_stream_tables(
         self,
@@ -630,48 +638,67 @@ class SingerEngine:
                 records, meta, ver_offset=run_base, translate_values=self.config.translate_values
             )
 
-        fused = root_snap.engine == "replacing" and meta.children and self.config.orphan_delete_per_batch
+        replacing = root_snap.engine == "replacing"
+        fused = replacing and meta.children and self.config.orphan_delete_per_batch
         batch_root = shredded[meta.table_name]
         # lineage counts the rows of the files this batch writes to the root,
         # never the whole table (an append-only root has no touched buckets)
         old_files = set(root_snap.files())
         touched: Optional[list[int]] = touched_hint
-        if root_snap.engine == "replacing":
+        if replacing:
             with self._phase("plan_build"):
                 batch_root = batch_root.withColumn("__ts", F.lit(False))
                 if deletes is not None:
                     batch_root = batch_root.unionByName(self._tombstones(meta, deletes, run_base))
             if touched is None and fused:
-                # needed again for the bucket-aligned child rewrite below
+                # needed again for the bucket-aligned child rewrites below
                 touched = self.catalog.touched_buckets(batch_root, root_snap)
-            with self._phase("root_merge"):
-                root_snap = M.merge_upsert(
-                    self.catalog, meta.table_name, batch_root,
-                    snap=root_snap, tombstone_col="__ts", touched=touched,
-                )
-        else:
-            if deletes is not None and not deletes.isEmpty():
-                raise ValueError(
-                    f"[{meta.prop}] cannot push deleted record to a stream without pk mapping"
-                )
-            with self._phase("root_merge"):
-                root_snap = M.append_rows(self.catalog, meta.table_name, batch_root, snap=root_snap)
-        # Commit children first, root last: the root's last_applied_seq is the
-        # batch barrier, so a replay after a partial crash re-applies only the
-        # tables that didn't commit. Per-batch D3 (fused): one rewrite per
-        # child adds its batch rows and drops orphans of the root's merge.
-        if fused:
-            root_df = self.catalog.read(meta.table_name, buckets=touched, snap=root_snap)
+        elif deletes is not None and not deletes.isEmpty():
+            raise ValueError(
+                f"[{meta.prop}] cannot push deleted record to a stream without pk mapping"
+            )
+        # Per-batch D3 (fused): one rewrite per child adds its batch rows and
+        # drops the orphans, judged from the batch's own root rows
+        # (``M.orphan_delete``), so no child waits for the root's merge. That
+        # rule assumes the child matches the committed root: a child stamped
+        # with another run or offset than the root (a crash between its
+        # commit and the root's that no replay repaired) is swept against
+        # the committed root first. An empty child matches any root.
+        children = []
         for node in list(meta.walk())[1:]:
             with self._phase("snap_io"):
                 snap = self.catalog.snapshot(node.table_name)
             if snap.run_id == self.run_id and snap.last_applied_seq >= hi:
                 continue  # replay: this child already has the batch
+            stamp = (snap.run_id, snap.last_applied_seq)
+            if fused and snap.files() and stamp != (root_snap.run_id, root_snap.last_applied_seq):
+                with self._phase("child_write"):
+                    (snap,) = self._delete_orphans(meta, [node], root_snap)
+            children.append((node, snap))
+
+        def write(item):
+            node, snap = item
+            if node is meta:
+                with self._phase("root_merge"):
+                    if replacing:
+                        return M.merge_upsert(
+                            self.catalog, meta.table_name, batch_root,
+                            snap=snap, tombstone_col="__ts", touched=touched,
+                        )
+                    return M.append_rows(self.catalog, meta.table_name, batch_root, snap=snap)
             with self._phase("child_write"):
                 if fused:
-                    snap = self._drop_orphans(meta, node, root_df, touched, snap, shredded[node.table_name])
-                else:
-                    snap = M.append_rows(self.catalog, node.table_name, shredded[node.table_name], snap=snap)
+                    return self._drop_orphans(meta, node, batch_root, touched, snap, shredded[node.table_name])
+                return M.append_rows(self.catalog, node.table_name, shredded[node.table_name], snap=snap)
+
+        # The root and every child write at once; nothing commits until all
+        # of them have written. Children commit first, root last: the root's
+        # last_applied_seq is the batch barrier, so a replay after a partial
+        # crash re-applies only the tables that didn't commit.
+        root_snap, *child_snaps = _run_all(
+            self.spark, write, [(meta, root_snap)] + children, self.config.merge_concurrency
+        )
+        for (node, _), snap in zip(children, child_snaps):
             snap.last_applied_seq = hi
             snap.run_id = self.run_id
             with self._phase("commit_io"):
@@ -703,11 +730,20 @@ class SingerEngine:
         with self._metrics_lock:
             self._batch["streams"].append(entry)
 
-    def _delete_orphans(self, meta: TableMeta) -> None:
-        """Reference D3 (StreamProcessor.ts:148-169) over whole tables."""
-        root_df = self.catalog.read(meta.table_name)
-        for node in list(meta.walk())[1:]:
-            self._commit(node.table_name, self._drop_orphans(meta, node, root_df))
+    def _delete_orphans(self, meta: TableMeta, nodes=None, root_snap=None) -> list[TableSnapshot]:
+        """Reference D3 (StreamProcessor.ts:148-169) over whole tables: sweep
+        each child in ``nodes`` (default: all) against the committed root and
+        commit it stamped with the root's run and offset, which it now
+        matches. Returns the children's new snapshots."""
+        root_snap = root_snap or self.catalog.snapshot(meta.table_name)
+        root_df = self.catalog.read(meta.table_name, snap=root_snap)
+        snaps = []
+        for node in nodes or list(meta.walk())[1:]:
+            snap = self._drop_orphans(meta, node, root_df)
+            snap.run_id, snap.last_applied_seq = root_snap.run_id, root_snap.last_applied_seq
+            self._commit(node.table_name, snap)
+            snaps.append(snap)
+        return snaps
 
     def _drop_orphans(self, meta, node, root_df, buckets=None, snap=None, new_rows=None) -> TableSnapshot:
         return M.orphan_delete(
@@ -962,7 +998,7 @@ class SingerEngine:
         # the whole batch (reference F4) promptly: queued streams never start
         # merging after one fails. Within a stream ordering is preserved (one
         # thread per stream).
-        _run_all(apply_one, tasks, self.config.merge_concurrency)
+        _run_all(self.spark, apply_one, tasks, self.config.merge_concurrency)
 
         if last_state is not None:
             self._write_state(last_state)
@@ -1003,7 +1039,7 @@ class SingerEngine:
                     if keys:
                         M.assert_pk_integrity(self.catalog, node.table_name, keys=keys)
 
-        _run_all(finalize_stream, list(self.streams.values()), self.config.finalize_concurrency)
+        _run_all(self.spark, finalize_stream, list(self.streams.values()), self.config.finalize_concurrency)
 
     # ------------------------------------------------------------ file replay
     def run_file(self, path: str, finalize: bool = True) -> None:

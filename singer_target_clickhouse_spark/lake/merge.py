@@ -128,24 +128,44 @@ def orphan_delete(
     new_rows: Optional[DataFrame] = None,
 ) -> TableSnapshot:
     """Child-orphan delete (reference D3, ``StreamProcessor.ts:148-169``):
-    drop child rows whose (root-key…, _root_ver) has no surviving root row.
+    drop child rows whose (root key…, _root_ver) has no surviving root row.
 
     Children are bucketed on their ``_root_*`` columns with the same hash as
     the root's PK bucketing, so when ``buckets`` (the root buckets touched
-    this batch) is given, only those child buckets are read and rewritten and
-    ``root_df`` can be pre-restricted to the same buckets by the caller.
-    ``new_rows`` (batch rows, all in ``buckets``) join the child rows before
-    the semi-join, so one write appends the batch and drops the orphans.
+    this batch) is given, only those child buckets are read and rewritten.
+
+    Without ``new_rows``, ``root_df`` is the surviving root rows, and a
+    child row survives if it semi-joins to one of them on
+    (root key…, _root_ver): a sweep against a committed root.
+
+    With ``new_rows`` (a batch's child rows, all in ``buckets``), one write
+    adds them and drops the orphans without reading the root table:
+    ``root_df`` is the batch's own root rows, records and tombstones, and a
+    child row survives unless one of them has its root key and a higher
+    ``_ver``. So an existing row survives if the batch does not write its
+    key, and a batch row if its root row is its key's last in the batch and
+    not a tombstone. This equals the semi-join against the merged root when
+    every batch ``_ver`` is above every committed root ``_ver`` and the child
+    matched the committed root before the batch; the engine checks both.
     """
     snap = snap or catalog.snapshot(child_name)
     child = catalog.read(child_name, buckets=buckets, snap=snap)
-    if new_rows is not None:
-        child = child.unionByName(new_rows.select(*child.columns))
-    surviving = root_df.select(
-        *[F.col(p).alias(c) for p, c in zip(root_pk, child_root_cols)],
-        F.col("_ver").alias("_root_ver"),
-    )
-    kept = child.join(surviving, on=child_root_cols + ["_root_ver"], how="left_semi")
+    if new_rows is None:
+        surviving = root_df.select(
+            *[F.col(p).alias(c) for p, c in zip(root_pk, child_root_cols)],
+            F.col("_ver").alias("_root_ver"),
+        )
+        kept = child.join(surviving, on=child_root_cols + ["_root_ver"], how="left_semi")
+    else:
+        rows = child.unionByName(new_rows.select(*child.columns))
+        newer = root_df.select(
+            *[F.col(p).alias(f"__batch_{c}") for p, c in zip(root_pk, child_root_cols)],
+            F.col("_ver").alias("__batch_ver"),
+        )
+        on = [F.col(c) == F.col(f"__batch_{c}") for c in child_root_cols]
+        for c in child_root_cols:  # a null root key matches no root row, as in the semi-join
+            rows = rows.where(F.col(c).isNotNull())
+        kept = rows.join(F.broadcast(newer), on + [F.col("__batch_ver") > F.col("_root_ver")], "left_anti")
     if buckets is not None:
         return catalog.overwrite_buckets(child_name, kept, buckets, snap)
     return catalog.overwrite_all(child_name, kept, snap)

@@ -12,6 +12,7 @@ import pytest
 
 from singer_target_clickhouse_spark.config import Config
 from singer_target_clickhouse_spark.engine import RecordBeforeSchemaError, SingerEngine
+from singer_target_clickhouse_spark.lake.catalog import LakeCatalog
 from singer_target_clickhouse_spark.schema.translator import PKConsistencyError
 
 DATA = os.path.join(os.path.dirname(__file__), "fixtures")
@@ -530,11 +531,12 @@ def test_replacing_batch_runs_two_jobs(spark, lake):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
-def test_child_batch_is_one_rewrite(spark, lake):
+def test_child_batch_is_one_rewrite(spark, lake, monkeypatch):
     # A steady batch of a replacing root with one child: the child's batch
     # rows and its per-batch orphan delete go out in one bucket rewrite, so
     # the child commits one snapshot per batch, and the job count is pinned
-    # like the single-table one above.
+    # like the single-table one above. The rewrite judges orphans from the
+    # batch alone, so the root table is read once, by its own merge.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         schema = json.dumps({
@@ -552,12 +554,22 @@ def test_child_batch_is_one_rewrite(spark, lake):
         e.apply_lines(_mk_lines(spark, [schema] + recs("a"), 0))
         child_snap = e.catalog.snapshot("fc__tags").snapshot_id
 
+        reads = []
+        orig_read = LakeCatalog.read
+
+        def read(self, name, *args, **kwargs):
+            reads.append(name)
+            return orig_read(self, name, *args, **kwargs)
+
+        monkeypatch.setattr(LakeCatalog, "read", read)
         sc = spark.sparkContext
         sc.setJobGroup("steady-child-batch", "job-count probe", False)
         e.apply_lines(_mk_lines(spark, recs("b"), 100))
         jobs = sc.statusTracker().getJobIdsForGroup("steady-child-batch")
+        monkeypatch.undo()
         assert e.catalog.snapshot("fc__tags").snapshot_id == child_snap + 1
         assert len(jobs) <= 4, f"expected <=4 jobs in a steady child batch, got {len(jobs)}"
+        assert sorted(reads) == ["fc", "fc__tags"]
         assert rows(e, "fc__tags", "_root_id", "t") == [(i, f"b{i}") for i in range(10)]
     finally:
         spark.sparkContext.setJobGroup("", "", False)

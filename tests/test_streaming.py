@@ -5,12 +5,14 @@ streaming form per SURVEY.md §7 M5)."""
 import hashlib
 import json
 import os
+import threading
 
 import pytest
 
 from singer_target_clickhouse_spark.config import Config
 from singer_target_clickhouse_spark.engine import SingerEngine
 from singer_target_clickhouse_spark.gen import REPO_SCHEMA_MESSAGE, REPO_STREAM
+from singer_target_clickhouse_spark.lake import merge
 from singer_target_clickhouse_spark.lake.catalog import LakeCatalog
 from singer_target_clickhouse_spark.streaming import StreamingDriver
 
@@ -119,15 +121,21 @@ _TK_LOG = [
 ]
 
 
-def _tk_run(spark, root, mp=None, calls=None, crash=None):
-    """Write the log under ``root`` and run a driver over it, one file per
-    batch. With ``mp``, every ``SingerEngine._commit`` call appends its table
-    to ``calls``, and ``crash=(n, when)`` raises just "before" or "after" the
-    n-th call."""
+def _drive(spark, root, batches):
+    """Write ``batches`` under ``root`` as one log file each and run a driver
+    over them, one file per micro-batch."""
     log = root / "log"
-    for i, msgs in enumerate(_TK_LOG):
+    for i, msgs in enumerate(batches):
         _write_log(log, f"{i:03d}.jsonl", msgs)
         os.utime(log / f"{i:03d}.jsonl", (1_000_000 + i, 1_000_000 + i))
+    cfg = Config(lake_root=str(root / "lake"), n_buckets=4)
+    StreamingDriver(spark, cfg, str(log), str(root / "ckpt"), max_files_per_trigger=1).run_available()
+
+
+def _tk_run(spark, root, mp=None, calls=None, crash=None):
+    """Run a driver over ``_TK_LOG`` under ``root``. With ``mp``, every
+    ``SingerEngine._commit`` call appends its table to ``calls``, and
+    ``crash=(n, when)`` raises just "before" or "after" the n-th call."""
     if mp is not None:
         orig = SingerEngine._commit
 
@@ -141,8 +149,7 @@ def _tk_run(spark, root, mp=None, calls=None, crash=None):
                 raise _Crash(f"injected after _commit call {n}")
 
         mp.setattr(SingerEngine, "_commit", commit)
-    cfg = Config(lake_root=str(root / "lake"), n_buckets=4)
-    StreamingDriver(spark, cfg, str(log), str(root / "ckpt"), max_files_per_trigger=1).run_available()
+    _drive(spark, root, _TK_LOG)
 
 
 def _lake_digest(spark, lake):
@@ -199,3 +206,113 @@ def test_crash_in_last_batch_converges(spark, tmp_path, monkeypatch, when):
         assert _lake_digest(spark, str(root / "lake")) == want, (
             f"no convergence after a crash {when} _commit call {n - first} of the last batch"
         )
+
+
+def test_unreplayed_crash_leaves_no_orphans(spark, tmp_path, monkeypatch):
+    # A crash between a child's commit and its root's leaves the child ahead
+    # of the root. When the next run does not replay that batch, the child
+    # must be swept against the committed root before its next rewrite, or
+    # the rows the uncommitted batch wrote stay as orphans.
+    cfg = Config(lake_root=str(tmp_path / "lake"), n_buckets=4)
+
+    def lines(msgs, base):
+        return spark.createDataFrame(
+            [(json.dumps(m), base + i) for i, m in enumerate(msgs)], "value string, _seq long")
+
+    SingerEngine(spark, cfg).apply_lines(lines([_TK_SCHEMA] + [_tk(i, f"a{i}") for i in range(20)], 0))
+    orig = SingerEngine._commit
+
+    def commit(self, name, snap):
+        if name == "tk":
+            raise _Crash("injected before the root commit")
+        orig(self, name, snap)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(SingerEngine, "_commit", commit)
+        with pytest.raises(_Crash):
+            SingerEngine(spark, cfg).apply_lines(lines([_tk(i, f"b{i}") for i in range(20)], 100))
+    e = SingerEngine(spark, cfg)
+    e.apply_lines(lines([_tk(0, "c0")], 200))
+
+    root = e.catalog.read("tk").selectExpr("id AS _root_id", "_ver AS _root_ver")
+    child = e.catalog.read("tk__tags")
+    assert child.join(root, ["_root_id", "_root_ver"], "left_anti").count() == 0
+    assert [r["t"] for r in child.where("_root_id = 0").collect()] == ["c0"]
+
+
+_MC_SCHEMA = {
+    "type": "SCHEMA", "stream": "mc",
+    "schema": {"type": "object", "properties": {
+        "id": {"type": "integer"},
+        "tags": {"type": ["null", "array"], "items": {"type": "object", "properties": {
+            "t": {"type": ["null", "string"]}}}},
+        "notes": {"type": ["null", "array"], "items": {"type": ["null", "string"]}}}},
+    "key_properties": ["id"],
+}
+_FL_SCHEMA = {
+    "type": "SCHEMA", "stream": "fl",
+    "schema": {"type": "object", "properties": {
+        "id": {"type": "integer"}, "v": {"type": ["null", "string"]}}},
+    "key_properties": ["id"],
+}
+
+
+def _mc(i, tags, notes):
+    return {"type": "RECORD", "stream": "mc",
+            "record": {"id": i, "tags": [{"t": t} for t in tags], "notes": notes}}
+
+
+def _fl(i, v):
+    return {"type": "RECORD", "stream": "fl", "record": {"id": i, "v": v}}
+
+
+#: a root with two children (``mc__tags``, ``mc__notes``) beside a flat
+#: stream, every batch writing both; the last one updates and deletes keys
+#: whose child rows earlier batches committed
+_MC_LOG = [
+    [_MC_SCHEMA, _FL_SCHEMA] + [_mc(i, [f"t{i}"], [f"n{i}"]) for i in range(8)]
+    + [_fl(i, "a") for i in range(4)] + [{"type": "STATE", "value": {"pos": 0}}],
+    [_mc(1, ["t1b", "t1c"], []), _mc(2, [], ["n2b"]), _fl(1, "b"),
+     {"type": "STATE", "value": {"pos": 1}}],
+    [_mc(3, ["t3c"], ["n3c", "n3d"]), {"type": "DELETED_RECORD", "stream": "mc", "record": {"id": 4}},
+     _mc(1, ["t1d"], ["n1d"]), _mc(9, ["t9"], []), _fl(2, "c"), _fl(5, "c"),
+     {"type": "STATE", "value": {"pos": 2}}],
+]
+
+
+def test_crash_in_concurrent_child_write_converges(spark, tmp_path, monkeypatch):
+    # The root and both children of a stream write at once. One child's
+    # write raises in the last batch while its sibling's write runs: the
+    # batch must fail with no table of that stream committing it, and a
+    # fresh driver must converge to the uninterrupted run.
+    _drive(spark, tmp_path / "ref", _MC_LOG)
+    want = _lake_digest(spark, str(tmp_path / "ref" / "lake"))
+    assert want["_state.json"] == {"pos": 2}
+
+    # in the last batch both child writes meet at the barrier, which breaks
+    # (failing the test) unless they run at the same time
+    calls = {"mc__tags": 0, "mc__notes": 0}
+    both_running = threading.Barrier(2, timeout=60)
+    orig = merge.orphan_delete
+
+    def orphan_delete(catalog, child_name, *args, **kwargs):
+        calls[child_name] += 1
+        if calls[child_name] == len(_MC_LOG):
+            both_running.wait()
+            if child_name == "mc__notes":
+                raise _Crash("injected in the mc__notes write")
+        return orig(catalog, child_name, *args, **kwargs)
+
+    root = tmp_path / "crash"
+    with monkeypatch.context() as mp:
+        mp.setattr(merge, "orphan_delete", orphan_delete)
+        with pytest.raises(Exception, match="injected"):
+            _drive(spark, root, _MC_LOG)
+    assert calls == {"mc__tags": len(_MC_LOG), "mc__notes": len(_MC_LOG)}
+    ref = LakeCatalog(str(tmp_path / "ref" / "lake"), spark)
+    cat = LakeCatalog(str(root / "lake"), spark)
+    for t in ("mc", "mc__tags", "mc__notes"):
+        assert cat.snapshot(t).last_applied_seq < ref.snapshot(t).last_applied_seq, t
+
+    _drive(spark, root, _MC_LOG)
+    assert _lake_digest(spark, str(root / "lake")) == want
