@@ -522,10 +522,10 @@ class SingerEngine:
         # which needs every batch _ver (the lowest is run_base + gate + 2)
         # above every committed root _ver. _run_base guarantees it; a
         # violation would silently keep orphans, so fail instead.
-        if run_base + gate + 2 <= root_snap.run_seq_base + root_snap.last_applied_seq + 1:
+        lowest, highest = run_base + gate + 2, root_snap.run_seq_base + root_snap.last_applied_seq + 1
+        if lowest <= highest:
             raise RuntimeError(
-                f"[{meta.prop}] batch versions from {run_base + gate + 2} do not exceed "
-                f"the committed root's {root_snap.run_seq_base + root_snap.last_applied_seq + 1}"
+                f"[{meta.prop}] batch versions from {lowest} do not exceed the committed root's {highest}"
             )
         records = records.where(F.col(SEQ_COL) > gate)
         if deletes is not None:
