@@ -1,10 +1,12 @@
 """Engine configuration.
 
 Mirrors the reference's ``src/Config.ts`` knobs where they still make sense on
-Spark, and adds the Spark-native ones (bucket count, per-batch orphan delete,
-merge concurrency, cleaning-value cap, auto-vacuum). The reference's
-row-buffering knobs (``batch_size``, ``insert_stream_timeout``) have no field
-here: micro-batch triggers subsume them.
+Spark, and adds the Spark-native ones (bucket count, merge concurrency,
+cleaning-value cap). The reference's row-buffering knobs (``batch_size``,
+``insert_stream_timeout``) have no field here: micro-batch triggers subsume
+them. Behaviours the reference has no switch for have none here either: the
+child-orphan delete runs in every batch's child rewrite, finalize always
+asserts PK integrity, and every data commit vacuums its table.
 
 Note the reference defines ``finalize_concurrency`` (default 3,
 ``src/Config.ts:32``) but its finalize pool actually uses ``batch_size``
@@ -46,18 +48,6 @@ class Config:
     #: 100 TB you want O(10k) buckets so a bucket is a few hundred MB.
     n_buckets: int = 32
 
-    #: Run the child-orphan delete (reference D3, ``StreamProcessor.ts:148-169``)
-    #: after every batch instead of only at finalize, in the same bucket
-    #: rewrite that adds the batch's child rows (one commit per child per
-    #: batch). Orphans are judged from the batch's own root rows, so the
-    #: rewrites run beside the root merge rather than after it. Keeps child
-    #: tables always-consistent; cost is bounded by the touched root buckets.
-    orphan_delete_per_batch: bool = True
-
-    #: Assert PK uniqueness after finalize (reference D7,
-    #: ``StreamProcessor.ts:176-193``).
-    assert_pk_integrity: bool = True
-
     #: Documented-but-unused in the reference; here it bounds how many
     #: streams finalize concurrently (driver-side thread pool submitting
     #: independent Spark jobs).
@@ -80,9 +70,3 @@ class Config:
     #: distinct collect.
     max_cleaning_values: int = 10_000
 
-    #: Auto-GC: run ``catalog.vacuum`` on a table every N snapshot commits
-    #: (0 disables). Keeps long replays storage-bounded — a bucket-pruned
-    #: merge strands one superseded file set per touched bucket per batch.
-    #: Retains the previous snapshot's files (``retain_last=2``) so lazy
-    #: frames pinned to the prior snapshot within the batch stay readable.
-    vacuum_every_commits: int = 16

@@ -339,19 +339,16 @@ class SingerEngine:
             check_primary_keys_consistency(existing, meta)
         dirty = False
         for col in inter["missing"]:
-            snap = self.catalog.add_column(
-                meta.table_name, col.name, _spark_type_of_ch(col.type), col.type,
-                snap=snap, defer=True,
-            )
+            snap = self.catalog.add_column(col.name, _spark_type_of_ch(col.type), col.type, snap)
             dirty = True
         for mod in inter["modified"]:
             snap = self.catalog.modify_column(
                 meta.table_name, mod["new"].name, _spark_type_of_ch(mod["new"].type),
-                mod["new"].type, snap=snap, defer=True,
+                mod["new"].type, snap,
             )
             dirty = True
         for col in inter["obsolete"]:
-            snap = self.catalog.drop_column(meta.table_name, col.name, snap=snap, defer=True)
+            snap = self.catalog.drop_column(col.name, snap)
             dirty = True
         if dirty:
             self.catalog.commit_snapshot(meta.table_name, snap)
@@ -442,17 +439,18 @@ class SingerEngine:
                 self.catalog.rename_table(table, f"{DROPPED_TABLE_PREFIX}{table}")
 
     def _commit(self, name: str, snap: TableSnapshot) -> None:
-        """Commit a data-rewriting snapshot, then auto-GC the table every
-        ``vacuum_every_commits`` snapshot ids: bounds on-disk amplification
-        over a long replay — each bucket-pruned rewrite strands one
-        superseded file set per touched bucket. Every data commit goes
-        through here (a child's batch rewrite, a cleaning wipe or sweep, the
-        root merge), so each lands on the vacuum ids. ``retain_last=2``
-        keeps the previous snapshot readable for lazy frames still in flight
-        within this batch."""
-        self.catalog.commit_snapshot(name, snap)
-        every = self.config.vacuum_every_commits
-        if every and snap.snapshot_id % every == 0:
+        """Commit a data-rewriting snapshot, then vacuum the table down to
+        its last two snapshots, so a table never holds more than two
+        generations of files however long the replay. Every data commit goes
+        through here (a child's batch rewrite, restore or sweep, a cleaning
+        wipe, the root merge), always inside ``apply_lines`` and on the
+        stream's own thread, while no other write of the table runs.
+        ``retain_last=2`` keeps the README's pinning contract (a lazy frame
+        stays readable for one further commit of its table) and the previous
+        manifest a crashed child is restored from."""
+        with self._phase("commit_io"):
+            self.catalog.commit_snapshot(name, snap)
+        with self._phase("vacuum"):
             self.catalog.vacuum(name, retain_last=2)
 
     # ----------------------------------------------------------- apply (core)
@@ -488,30 +486,24 @@ class SingerEngine:
         for c in meta.simple_columns:
             sel.append(F.lit(None).cast(c.spark_field_type()).alias(c.name))
         sel.append((F.col(SEQ_COL) + F.lit(run_base + 1)).cast("long").alias(meta.version_column))
-        sel.append(F.lit(True).alias("__ts"))
+        sel.append(F.lit(True).alias(M.TOMBSTONE_COL))
         return out.select(*sel)
 
     def _apply_stream_records(
         self,
         state: StreamState,
         records: DataFrame,
-        deletes: Optional[DataFrame] = None,
-        bounds: Optional[tuple[int, int]] = None,
-        touched_hint: Optional[list[int]] = None,
+        deletes: Optional[DataFrame],
+        bounds: tuple[int, int],
+        touched_hint: Optional[list[int]],
     ) -> None:
         """records / deletes: (record string, _seq long) for ONE stream.
         ``bounds`` (min seq, max seq over records+deletes) and
         ``touched_hint`` (root buckets this batch touches, possibly a safe
-        superset) are precomputed by the batch-level stats pass when
-        available — the whole preamble is then one Spark job."""
+        superset, or None when the probe did not cover the stream) come from
+        the batch-level stats pass — the whole preamble is one Spark job."""
         t_start = time.time()
         meta = state.meta
-        if bounds is None:
-            both = records if deletes is None else records.unionByName(deletes)
-            row = both.agg(F.min(SEQ_COL).alias("lo"), F.max(SEQ_COL).alias("hi")).collect()[0]
-            if row["lo"] is None:
-                return
-            bounds = (row["lo"], row["hi"])
         lo, hi = bounds
 
         root_snap = self.catalog.snapshot(meta.table_name)
@@ -639,7 +631,7 @@ class SingerEngine:
             )
 
         replacing = root_snap.engine == "replacing"
-        fused = replacing and meta.children and self.config.orphan_delete_per_batch
+        fused = replacing and meta.children
         batch_root = shredded[meta.table_name]
         # lineage counts the rows of the files this batch writes to the root,
         # never the whole table (an append-only root has no touched buckets)
@@ -647,7 +639,7 @@ class SingerEngine:
         touched: Optional[list[int]] = touched_hint
         if replacing:
             with self._phase("plan_build"):
-                batch_root = batch_root.withColumn("__ts", F.lit(False))
+                batch_root = batch_root.withColumn(M.TOMBSTONE_COL, F.lit(False))
                 if deletes is not None:
                     batch_root = batch_root.unionByName(self._tombstones(meta, deletes, run_base))
             if touched is None and fused:
@@ -660,20 +652,21 @@ class SingerEngine:
         # Per-batch D3 (fused): one rewrite per child adds its batch rows and
         # drops the orphans, judged from the batch's own root rows
         # (``M.orphan_delete``), so no child waits for the root's merge. That
-        # rule assumes the child matches the committed root: a child stamped
+        # rule assumes the child matches the committed root. A child stamped
         # with another run or offset than the root (a crash between its
-        # commit and the root's that no replay repaired) is swept against
-        # the committed root first. An empty child matches any root.
+        # commit and the root's that no replay repaired) gets back its
+        # previous manifest when that one matches the root, else is swept
+        # against the committed root. A child no batch wrote yet (no run id)
+        # matches any root.
         children = []
+        root_stamp = (root_snap.run_id, root_snap.last_applied_seq)
         for node in list(meta.walk())[1:]:
             with self._phase("snap_io"):
                 snap = self.catalog.snapshot(node.table_name)
             if snap.run_id == self.run_id and snap.last_applied_seq >= hi:
                 continue  # replay: this child already has the batch
-            stamp = (snap.run_id, snap.last_applied_seq)
-            if fused and snap.files() and stamp != (root_snap.run_id, root_snap.last_applied_seq):
-                with self._phase("child_write"):
-                    (snap,) = self._delete_orphans(meta, [node], root_snap)
+            if fused and snap.run_id and (snap.run_id, snap.last_applied_seq) != root_stamp:
+                snap = self._restore_child(meta, node, snap, root_snap)
             children.append((node, snap))
 
         def write(item):
@@ -682,8 +675,7 @@ class SingerEngine:
                 with self._phase("root_merge"):
                     if replacing:
                         return M.merge_upsert(
-                            self.catalog, meta.table_name, batch_root,
-                            snap=snap, tombstone_col="__ts", touched=touched,
+                            self.catalog, meta.table_name, batch_root, snap=snap, touched=touched,
                         )
                     return M.append_rows(self.catalog, meta.table_name, batch_root, snap=snap)
             with self._phase("child_write"):
@@ -701,13 +693,11 @@ class SingerEngine:
         for (node, _), snap in zip(children, child_snaps):
             snap.last_applied_seq = hi
             snap.run_id = self.run_id
-            with self._phase("commit_io"):
-                self._commit(node.table_name, snap)
+            self._commit(node.table_name, snap)
         root_snap.last_applied_seq = hi
         root_snap.run_seq_base = run_base
         root_snap.run_id = self.run_id
-        with self._phase("commit_io"):
-            self._commit(meta.table_name, root_snap)
+        self._commit(meta.table_name, root_snap)
         # parquet footers read driver-side: lineage adds NO Spark job
         with self._phase("lineage"):
             rows_after = self.catalog.footer_row_count(
@@ -739,11 +729,33 @@ class SingerEngine:
         root_df = self.catalog.read(meta.table_name, snap=root_snap)
         snaps = []
         for node in nodes or list(meta.walk())[1:]:
-            snap = self._drop_orphans(meta, node, root_df)
+            with self._phase("child_write"):
+                snap = self._drop_orphans(meta, node, root_df)
             snap.run_id, snap.last_applied_seq = root_snap.run_id, root_snap.last_applied_seq
             self._commit(node.table_name, snap)
             snaps.append(snap)
         return snaps
+
+    def _restore_child(self, meta: TableMeta, node: TableMeta, snap: TableSnapshot,
+                       root_snap: TableSnapshot) -> TableSnapshot:
+        """Bring a child stamped ahead of its committed root back in line.
+        Its commit already dropped the rows of every key the uncommitted
+        batch wrote, so a sweep would lose them for good. When the previous
+        manifest (kept by the vacuum's ``retain_last=2``) carries the root's
+        stamp, commit that manifest's files as the next snapshot: a pointer
+        flip, no Spark job. Otherwise sweep against the committed root."""
+        stamp = (root_snap.run_id, root_snap.last_applied_seq)
+        with self._phase("snap_io"):
+            try:
+                prev = self.catalog.snapshot(node.table_name, snap.snapshot_id - 1)
+            except FileNotFoundError:  # expired by a vacuum with retain_last=1
+                prev = None
+        if prev is None or (prev.run_id, prev.last_applied_seq) != stamp:
+            (snap,) = self._delete_orphans(meta, [node], root_snap)
+            return snap
+        prev.snapshot_id = snap.snapshot_id
+        self._commit(node.table_name, prev)
+        return prev
 
     def _drop_orphans(self, meta, node, root_df, buckets=None, snap=None, new_rows=None) -> TableSnapshot:
         return M.orphan_delete(
@@ -980,15 +992,11 @@ class SingerEngine:
             self._apply_stream_records(
                 self.streams[stream],
                 records.where(F.col("stream") == stream).select("record", SEQ_COL),
-                deletes=(
-                    deletes.where(F.col("stream") == stream).select("record", SEQ_COL)
-                    if dels
-                    else None
-                ),
-                bounds=(lo, hi),
+                deletes.where(F.col("stream") == stream).select("record", SEQ_COL) if dels else None,
+                (lo, hi),
                 # empty set => stream wasn't covered by the stats-time probe
                 # (meta unknown when the job ran) => merge computes it itself
-                touched_hint=sorted(buckets) if buckets else None,
+                sorted(buckets) if buckets else None,
             )
 
         # Per-stream merges are independent (disjoint tables, shared read-only
@@ -1021,32 +1029,29 @@ class SingerEngine:
 
     # -------------------------------------------------------------- finalize
     def finalize(self) -> None:
-        """Reference F2 (StreamProcessor.ts:97-119): per stream — orphan
-        delete (dedup already happened at merge time) + PK integrity assert.
-        Skipped for streams that started clean, like the reference. Streams
-        finalize concurrently (F3, ``finalize_concurrency``) — independent
-        Spark jobs submitted from a driver-side thread pool."""
+        """Reference F2 (StreamProcessor.ts:97-119): per stream, the PK
+        integrity assert (dedup happened at merge time, and every batch's
+        child rewrite already dropped the orphans). Skipped for streams that
+        started clean, like the reference. Streams finalize concurrently (F3,
+        ``finalize_concurrency``) — independent Spark jobs submitted from a
+        driver-side thread pool. Finalize reads only, so it commits nothing."""
 
         def finalize_stream(state: StreamState) -> None:
-            meta = state.meta
             if state.started_clean:
                 return
-            if meta.has_replacing_semantics and meta.children and not self.config.orphan_delete_per_batch:
-                self._delete_orphans(meta)
-            if self.config.assert_pk_integrity:
-                for node in meta.walk():
-                    keys = [c.name for c in node.pk_columns]
-                    if keys:
-                        M.assert_pk_integrity(self.catalog, node.table_name, keys=keys)
+            for node in state.meta.walk():
+                keys = [c.name for c in node.pk_columns]
+                if keys:
+                    M.assert_pk_integrity(self.catalog, node.table_name, keys=keys)
 
         _run_all(self.spark, finalize_stream, list(self.streams.values()), self.config.finalize_concurrency)
 
     # ------------------------------------------------------------ file replay
-    def run_file(self, path: str, finalize: bool = True) -> None:
-        """Batch replay of a JSONL file (reference CLI mode, ``index.ts:24``).
-        Line number = the durable source offset, recovered JVM-side
-        (``with_line_offsets``) — no per-row Python on the batch path."""
+    def run_file(self, path: str) -> None:
+        """Batch replay of a JSONL file, then finalize (reference CLI mode,
+        ``index.ts:24``). Line number = the durable source offset, recovered
+        JVM-side (``with_line_offsets``) — no per-row Python on the batch
+        path."""
         lines, _ = with_line_offsets(self.spark.read.text(path))
         self.apply_lines(lines)
-        if finalize:
-            self.finalize()
+        self.finalize()

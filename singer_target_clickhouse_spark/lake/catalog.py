@@ -146,11 +146,16 @@ class LakeCatalog:
     def table_exists(self, name: str) -> bool:
         return os.path.exists(os.path.join(self._table_dir(name), "_pointer.json"))
 
-    def snapshot(self, name: str) -> TableSnapshot:
+    def snapshot(self, name: str, snapshot_id: Optional[int] = None) -> TableSnapshot:
+        """The current snapshot, or the manifest ``snapshot_id`` while a
+        vacuum still keeps it (``FileNotFoundError`` once it is expired)."""
         tdir = self._table_dir(name)
-        with open(os.path.join(tdir, "_pointer.json")) as fh:
-            pointer = json.load(fh)
-        with open(os.path.join(tdir, pointer["current"])) as fh:
+        if snapshot_id is None:
+            with open(os.path.join(tdir, "_pointer.json")) as fh:
+                manifest = json.load(fh)["current"]
+        else:
+            manifest = f"snap-{snapshot_id:06d}.json"
+        with open(os.path.join(tdir, manifest)) as fh:
             return TableSnapshot.from_json(json.load(fh))
 
     def create_table(
@@ -326,16 +331,16 @@ class LakeCatalog:
         ``retain_last`` most recent snapshots, and manifests older than those
         (≙ Iceberg expire_snapshots + remove_orphan_files; the reference
         leans on ClickHouse background merges for the same reclamation).
-        Bucket-pruned merges rewrite only touched buckets, so between vacuums
-        a table keeps one superseded file set per rewritten bucket per batch
-        — at 10^10 events this GC is what bounds storage amplification.
+        Each bucket-pruned rewrite supersedes the files of the buckets it
+        touched; the engine vacuums after every data commit, so a table
+        holds at most the files of its last ``retain_last`` snapshots.
 
         ``retain_last=1`` keeps only the current snapshot's files — callers
         must then ensure no reader is pinned to an older snapshot (same
-        contract as Iceberg snapshot expiry). The engine's auto-vacuum uses
-        ``retain_last=2``, Iceberg-style (advisor round 2): lazy DataFrames
-        handed out against the previous snapshot within the current batch
-        stay readable. Returns removal counts."""
+        contract as Iceberg snapshot expiry). The engine uses
+        ``retain_last=2``: a lazy DataFrame read from the previous snapshot
+        stays readable, and the previous manifest stays restorable. Returns
+        removal counts."""
         snap = self.snapshot(name)
         tdir = self._table_dir(name)
         keep_ids = {snap.snapshot_id - i for i in range(max(retain_last, 1))}
@@ -370,33 +375,27 @@ class LakeCatalog:
         return removed
 
     # -------------------------------------------------------------- evolution
-    def add_column(self, name: str, col_name: str, spark_type: T.DataType, ch_type: str,
-                   snap: Optional[TableSnapshot] = None, defer: bool = False) -> TableSnapshot:
-        """ADD COLUMN: manifest-only (readers null-fill).
+    def add_column(self, col_name: str, spark_type: T.DataType, ch_type: str,
+                   snap: TableSnapshot) -> TableSnapshot:
+        """ADD COLUMN: manifest-only (readers null-fill), left uncommitted
+        like the other ALTERs below.
         ≙ reference ``ClickhouseConnection.addColumn`` (ts:38-54)."""
-        snap = snap or self.snapshot(name)
         schema = snap.spark_schema.add(col_name, spark_type, True)
         snap.schema_json = schema.jsonValue()
         snap.ch_columns = snap.ch_columns + [
             {"name": col_name, "type": ch_type, "is_in_sorting_key": False}
         ]
-        if not defer:
-            self.commit_snapshot(name, snap)
         return snap
 
-    def drop_column(self, name: str, col_name: str,
-                    snap: Optional[TableSnapshot] = None, defer: bool = False) -> TableSnapshot:
+    def drop_column(self, col_name: str, snap: TableSnapshot) -> TableSnapshot:
         """DROP COLUMN: manifest-only (scan prunes the column)."""
-        snap = snap or self.snapshot(name)
         schema = T.StructType([f for f in snap.spark_schema.fields if f.name != col_name])
         snap.schema_json = schema.jsonValue()
         snap.ch_columns = [c for c in snap.ch_columns if c["name"] != col_name]
-        if not defer:
-            self.commit_snapshot(name, snap)
         return snap
 
     def modify_column(self, name: str, col_name: str, spark_type: T.DataType, ch_type: str,
-                      snap: Optional[TableSnapshot] = None, defer: bool = False) -> TableSnapshot:
+                      snap: TableSnapshot) -> TableSnapshot:
         """MODIFY COLUMN: rewrite with cast (≙ ClickHouse mutation). Fails the
         whole ALTER when any existing value is unrepresentable in the new
         type, mirroring the reference's abort-on-error
@@ -405,7 +404,6 @@ class LakeCatalog:
         footer-cheap ``limit(1)`` probe with ``try_cast`` BEFORE anything is
         rewritten or the manifest mutated, so an aborted ALTER leaves the
         table untouched (ClickHouse's revert, ``ClickhouseConnection.ts:56-77``)."""
-        snap = snap or self.snapshot(name)
         old = self.read(name, snap=snap)
         violation = (
             old.where(F.col(col_name).isNotNull() & F.col(col_name).try_cast(spark_type).isNull())
@@ -429,7 +427,4 @@ class LakeCatalog:
         snap.ch_columns = [
             {**c, "type": ch_type} if c["name"] == col_name else c for c in snap.ch_columns
         ]
-        snap = self.overwrite_all(name, casted.select(*[f.name for f in fields]), snap)
-        if not defer:
-            self.commit_snapshot(name, snap)
-        return snap
+        return self.overwrite_all(name, casted.select(*[f.name for f in fields]), snap)

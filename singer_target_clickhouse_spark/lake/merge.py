@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from .catalog import LakeCatalog, TableSnapshot
 
+#: the boolean column that marks a ``merge_upsert`` batch row as a tombstone
+TOMBSTONE_COL = "__ts"
+
 
 def latest_wins(df: DataFrame, pk: list[str], ver_col: str = "_ver") -> DataFrame:
     """ReplacingMergeTree collapse: keep the max-`_ver` row per key
@@ -47,15 +50,14 @@ def merge_upsert(
     name: str,
     batch: DataFrame,
     snap: Optional[TableSnapshot] = None,
-    tombstone_col: Optional[str] = None,
     touched: Optional[list[int]] = None,
 ) -> TableSnapshot:
     """MERGE INTO … WHEN MATCHED AND s._ver > t._ver THEN UPDATE/DELETE, as
     a ``max_by`` aggregate (``latest_wins``) over target ∪ batch, restricted
     to the touched buckets.
 
-    The batch must carry the full table schema (pks, simple cols, `_ver`),
-    plus optionally a boolean ``tombstone_col``: DELETED_RECORD events enter
+    The batch must carry the full table schema (pks, simple cols, `_ver`)
+    plus the boolean ``TOMBSTONE_COL``: DELETED_RECORD events enter
     the same versioned merge as tombstone rows, so a delete at offset k kills
     exactly the versions below k and a later re-insert survives — strictly
     ordered CDC semantics (the reference applies buffered DELETEs at commit
@@ -69,23 +71,19 @@ def merge_upsert(
     snap = snap or catalog.snapshot(name)
     assert snap.engine == "replacing", f"{name} is not a replacing table"
     cols = [f.name for f in snap.spark_schema.fields]
-    sel = cols + ([tombstone_col] if tombstone_col else [])
-    batch = batch.select(*sel)
+    batch = batch.select(*cols, TOMBSTONE_COL)
     if touched is None:
         touched = catalog.touched_buckets(batch, snap)
     if not touched:
         return snap
-    target = catalog.read(name, buckets=touched, snap=snap)
-    if tombstone_col:
-        target = target.withColumn(tombstone_col, F.lit(False))
+    target = catalog.read(name, buckets=touched, snap=snap).withColumn(TOMBSTONE_COL, F.lit(False))
     # No explicit salting needed: latest_wins is a max_by hash aggregate whose
     # partial (map-side) combine already collapses hot keys per input
     # partition before the shuffle. (An explicit salted write was measured
     # and reverted in round 4: it amplified files-per-commit w-fold and
     # regressed end-to-end replay; the former ``skew_salt`` knob is removed.)
     merged = latest_wins(target.unionByName(batch), snap.pk, "_ver")
-    if tombstone_col:
-        merged = merged.where(~F.col(tombstone_col)).drop(tombstone_col)
+    merged = merged.where(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL)
     return catalog.overwrite_buckets(name, merged, touched, snap)
 
 

@@ -174,23 +174,19 @@ class KafkaStreamingDriver(StreamingDriver):
         bootstrap_servers: str,
         topic: str,
         checkpoint_dir: str,
-        max_offsets_per_trigger: Optional[int] = None,
     ):
         super().__init__(spark, config, input_dir="", checkpoint_dir=checkpoint_dir)
         self.bootstrap_servers = bootstrap_servers
         self.topic = topic
-        self.max_offsets_per_trigger = max_offsets_per_trigger
 
     def _read_stream(self) -> DataFrame:
-        reader = (
+        return (
             self.spark.readStream.format("kafka")
             .option("kafka.bootstrap.servers", self.bootstrap_servers)
             .option("subscribe", self.topic)
             .option("startingOffsets", "earliest")
+            .load()
         )
-        if self.max_offsets_per_trigger:
-            reader = reader.option("maxOffsetsPerTrigger", self.max_offsets_per_trigger)
-        return reader.load()
 
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         # Structural single-partition guard (advisor round 2): offsets are

@@ -714,10 +714,10 @@ def test_multi_stream_batch_merges_concurrently(spark, lake, tmp_path):
     assert [table_hash(e_par, t) for t in ("s1", "s2", "s3")] == h_before
 
 
-def test_orphan_delete_finalize_only_mode_parity(spark, lake, tmp_path):
-    # round-3 VERDICT #7: orphan_delete_per_batch=False defers the child
-    # orphan delete to finalize(); final content must equal the per-batch
-    # default across a multi-batch child-bearing replay with re-keyed rows.
+def test_per_batch_orphan_delete_leaves_no_orphans(spark, lake, monkeypatch):
+    # Every batch's child rewrite drops the orphans of the root versions it
+    # supersedes, across a multi-batch child-bearing replay with re-keyed
+    # rows, so finalize has nothing left to delete and commits nothing.
     schema = json.dumps({
         "type": "SCHEMA", "stream": "po", "schema": {"type": "object", "properties": {
             "id": {"type": "integer"},
@@ -732,32 +732,31 @@ def test_orphan_delete_finalize_only_mode_parity(spark, lake, tmp_path):
 
     # one batch carrying two versions of key 0 with different child arrays,
     # and a delete of key 1, whose children earlier batches committed: the
-    # per-batch rewrite semi-joins against the root's uncommitted merge
+    # per-batch rewrite judges orphans from the batch's own root rows
     last = [json.dumps({"type": "RECORD", "stream": "po",
                         "record": {"id": 0, "tags": [{"t": "x1"}, {"t": "x2"}, {"t": "x3"}]}}),
             json.dumps({"type": "RECORD", "stream": "po", "record": {"id": 0, "tags": [{"t": "y1"}]}}),
             json.dumps({"type": "DELETED_RECORD", "stream": "po", "record": {"id": 1}})]
 
-    hashes = {}
-    for mode in (True, False):
-        root = str(tmp_path / f"m{mode}")
-        e = engine(spark, root, orphan_delete_per_batch=mode)
-        e.apply_lines(_mk_lines(spark, [schema] + batch(1), 0))
-        e.apply_lines(_mk_lines(spark, batch(2), 100))
-        e.apply_lines(_mk_lines(spark, last, 200))
-        e.finalize()
-        hashes[mode] = (table_hash(e, "po"), table_hash(e, "po__tags"))
-        # superseded root versions must leave no child orphans either way
-        child = e.catalog.read("po__tags")
-        root_df = e.catalog.read("po")
-        orphans = child.join(
-            root_df.selectExpr("id as _root_id", "_ver as _root_ver"),
-            ["_root_id", "_root_ver"], "left_anti").count()
-        assert orphans == 0
-        got = rows(e, "po__tags", "_root_id", "t")
-        assert [t for i, t in got if i == 0] == ["y1"]
-        assert [t for i, t in got if i == 1] == []
-    assert hashes[True] == hashes[False]
+    e = engine(spark, lake)
+    e.apply_lines(_mk_lines(spark, [schema] + batch(1), 0))
+    e.apply_lines(_mk_lines(spark, batch(2), 100))
+    e.apply_lines(_mk_lines(spark, last, 200))
+    commits = []
+    monkeypatch.setattr(SingerEngine, "_commit", lambda self, name, snap: commits.append(name))
+    e.finalize()
+    assert commits == []
+    # superseded root versions must leave no child orphans
+    child = e.catalog.read("po__tags")
+    root_df = e.catalog.read("po")
+    orphans = child.join(
+        root_df.selectExpr("id as _root_id", "_ver as _root_ver"),
+        ["_root_id", "_root_ver"], "left_anti").count()
+    assert orphans == 0
+    got = rows(e, "po__tags", "_root_id", "t")
+    assert [t for i, t in got if i == 0] == ["y1"]
+    assert [t for i, t in got if i == 1] == []
+    assert got == sorted([(0, "y1")] + [(i, f"v2{x}{i}") for i in range(2, 6) for x in "ab"])
 
 
 def test_multi_stream_pool_failure_aborts_batch(spark, lake, tmp_path):
@@ -809,7 +808,7 @@ def test_one_metrics_record_per_batch(spark, lake):
         r = json.loads(line)  # raises on a torn line
         assert r["run_id"] == e.run_id
         assert r["wall_start"] < r["wall_end"]
-        assert {"stats_job", "engine_total"} <= set(r["phases"])
+        assert {"stats_job", "commit_io", "vacuum", "engine_total"} <= set(r["phases"])
         # stream k's 25 records follow its SCHEMA line at offset 26 * k
         got = {s["table"]: (s["seq_lo"], s["seq_hi"], s["rows_in_touched_buckets"])
                for s in r["streams"]}

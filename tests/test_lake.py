@@ -1,6 +1,7 @@
 """Lake-level maintenance + alternate-source tests: vacuum GC and the Kafka
 batch mapping (connector-less parts)."""
 
+import hashlib
 import json
 import os
 
@@ -100,9 +101,9 @@ def test_kafka_nonzero_partition_rejected_even_if_single(spark, tmp_path):
 
 def test_vacuum_retain_last_keeps_previous_snapshot(spark, tmp_path):
     lake = str(tmp_path / "lakeR")
-    e1 = SingerEngine(spark, Config(lake_root=lake, n_buckets=4, vacuum_every_commits=0))
+    e1 = SingerEngine(spark, Config(lake_root=lake, n_buckets=4))
     e1.run_file(f"{DATA}/stream_short.jsonl")
-    e2 = SingerEngine(spark, Config(lake_root=lake, n_buckets=4, vacuum_every_commits=0))
+    e2 = SingerEngine(spark, Config(lake_root=lake, n_buckets=4))
     e2.run_file(f"{DATA}/stream_short.jsonl")
     cat = e2.catalog
     cur = cat.snapshot("tickets")
@@ -133,7 +134,7 @@ def test_auto_vacuum_bounds_storage(spark, tmp_path):
     # replaying many batches with auto-vacuum keeps on-disk parquet bounded
     # (without it, every merge strands a superseded file set per bucket)
     lake = str(tmp_path / "lakeAV")
-    e = SingerEngine(spark, Config(lake_root=lake, n_buckets=2, vacuum_every_commits=2))
+    e = SingerEngine(spark, Config(lake_root=lake, n_buckets=2))
     schema = json.dumps({
         "type": "SCHEMA", "stream": "av", "schema": {"type": "object", "properties": {
             "id": {"type": "integer"}, "v": {"type": ["null", "integer"]}}},
@@ -151,8 +152,8 @@ def test_auto_vacuum_bounds_storage(spark, tmp_path):
         e.apply_lines(batch(i))
 
     # 6 merges over 2 buckets: unvacuumed would hold ~6 file generations;
-    # retain_last=2 every 2 commits keeps at most ~3 generations on disk
-    assert _parquet_count(lake, "av") <= 3 * 2
+    # retain_last=2 after every commit keeps 2 generations on disk
+    assert _parquet_count(lake, "av") <= 2 * 2
     got = sorted((r["id"], r["v"]) for r in e.catalog.read("av").collect())
     assert got == [(k, 5) for k in range(8)]
 
@@ -162,7 +163,7 @@ def test_auto_vacuum_bounds_child_storage(spark, tmp_path):
     # with the batch rows and without orphans); auto-vacuum must fire on it
     # and keep its on-disk parquet bounded like the root's
     lake = str(tmp_path / "lakeAVC")
-    e = SingerEngine(spark, Config(lake_root=lake, n_buckets=2, vacuum_every_commits=2))
+    e = SingerEngine(spark, Config(lake_root=lake, n_buckets=2))
     schema = json.dumps({
         "type": "SCHEMA", "stream": "avc", "schema": {"type": "object", "properties": {
             "id": {"type": "integer"},
@@ -188,10 +189,45 @@ def test_auto_vacuum_bounds_child_storage(spark, tmp_path):
 
     # every batch strands a superseded file set per bucket on the child
     # (its bucket rewrite); without vacuum that grows with the batch count,
-    # with it at most ~3 generations stay on disk
-    assert _parquet_count(lake, child) <= 3 * 2
+    # with it 2 generations stay on disk
+    assert _parquet_count(lake, child) <= 2 * 2
     got = sorted((r["x"],) for r in e.catalog.read(child).collect())
     assert got == [(n_batches - 1,)] * 8 + [(n_batches,)] * 8
+
+
+def test_storage_stays_within_two_generations(spark, tmp_path):
+    # Under the default Config, a keyed stream with a child that rewrites
+    # every key each batch holds at most its current and previous file
+    # generations after every batch; manifests add the rest. Without a vacuum
+    # on every data commit each batch strands one more copy of the data.
+    lake = str(tmp_path / "lakeSA")
+    e = SingerEngine(spark, Config(lake_root=lake))
+    schema = json.dumps({
+        "type": "SCHEMA", "stream": "sa", "schema": {"type": "object", "properties": {
+            "id": {"type": "integer"}, "p": {"type": ["null", "string"]},
+            "items": {"type": ["null", "array"], "items": {
+                "type": "object", "properties": {"x": {"type": ["null", "string"]}}}}}},
+        "key_properties": ["id"]})
+
+    def payload(*parts):  # 1 KB that parquet cannot compress away
+        return "".join(hashlib.sha256(f"{parts}{k}".encode()).hexdigest() for k in range(16))
+
+    def batch(i):
+        recs = [json.dumps({"type": "RECORD", "stream": "sa", "record": {
+                    "id": k, "p": payload(i, k),
+                    "items": [{"x": payload(i, k, 0)}, {"x": payload(i, k, 1)}]}})
+                for k in range(48)]
+        lines = ([schema] if i == 0 else []) + recs
+        return spark.createDataFrame(
+            [(l, i * 100 + j) for j, l in enumerate(lines)], "value string, _seq long")
+
+    for i in range(10):
+        e.apply_lines(batch(i))
+        for t in ("sa", "sa__items"):
+            tdir = os.path.join(lake, "tables", t)
+            on_disk = sum(os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(tdir) for f in fs)
+            live = sum(os.path.getsize(os.path.join(tdir, f)) for f in e.catalog.snapshot(t).files())
+            assert on_disk <= 2.2 * live, (i, t, on_disk / live)
 
 
 def test_merge_upsert_latest_wins_golden(spark, tmp_path):
@@ -237,7 +273,7 @@ def test_merge_upsert_latest_wins_golden(spark, tmp_path):
         bucket_by=["k"], n_buckets=4,
     )
     for rows in batches:
-        snap = M.merge_upsert(cat, "t", batch_df(rows), snap=snap, tombstone_col="__ts")
+        snap = M.merge_upsert(cat, "t", batch_df(rows), snap=snap)
         cat.commit_snapshot("t", snap)
     got = sorted(map(tuple, cat.read("t").collect()), key=lambda r: (r[0] is None, r))
     # the merged content is what ordered CDC semantics demand

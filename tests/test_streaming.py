@@ -211,8 +211,9 @@ def test_crash_in_last_batch_converges(spark, tmp_path, monkeypatch, when):
 def test_unreplayed_crash_leaves_no_orphans(spark, tmp_path, monkeypatch):
     # A crash between a child's commit and its root's leaves the child ahead
     # of the root. When the next run does not replay that batch, the child
-    # must be swept against the committed root before its next rewrite, or
-    # the rows the uncommitted batch wrote stay as orphans.
+    # must be brought back to the committed root before its next rewrite, or
+    # the rows the uncommitted batch wrote stay as orphans and the rows it
+    # replaced are lost.
     cfg = Config(lake_root=str(tmp_path / "lake"), n_buckets=4)
 
     def lines(msgs, base):
@@ -238,6 +239,37 @@ def test_unreplayed_crash_leaves_no_orphans(spark, tmp_path, monkeypatch):
     child = e.catalog.read("tk__tags")
     assert child.join(root, ["_root_id", "_root_ver"], "left_anti").count() == 0
     assert [r["t"] for r in child.where("_root_id = 0").collect()] == ["c0"]
+    # the keys the new run did not write keep their committed child rows
+    assert sorted((r["_root_id"], r["t"]) for r in child.where("_root_id > 0").collect()) == [
+        (i, f"a{i}") for i in range(1, 20)]
+
+
+def test_unreplayed_crash_restores_emptied_child(spark, tmp_path, monkeypatch):
+    # As above, but the crashed batch emptied the child: its previous rows
+    # must come back although the child it left ahead has no files.
+    cfg = Config(lake_root=str(tmp_path / "lake"), n_buckets=4)
+
+    def lines(msgs, base):
+        return spark.createDataFrame(
+            [(json.dumps(m), base + i) for i, m in enumerate(msgs)], "value string, _seq long")
+
+    SingerEngine(spark, cfg).apply_lines(lines([_TK_SCHEMA] + [_tk(i, f"a{i}") for i in range(20)], 0))
+    orig = SingerEngine._commit
+
+    def commit(self, name, snap):
+        if name == "tk":
+            raise _Crash("injected before the root commit")
+        orig(self, name, snap)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(SingerEngine, "_commit", commit)
+        with pytest.raises(_Crash):
+            SingerEngine(spark, cfg).apply_lines(lines([_tk(i) for i in range(20)], 100))
+    assert SingerEngine(spark, cfg).catalog.snapshot("tk__tags").files() == []
+    e = SingerEngine(spark, cfg)
+    e.apply_lines(lines([_tk(0, "c0")], 200))
+    got = sorted((r["_root_id"], r["t"]) for r in e.catalog.read("tk__tags").collect())
+    assert got == [(0, "c0")] + [(i, f"a{i}") for i in range(1, 20)]
 
 
 _MC_SCHEMA = {
