@@ -8,9 +8,10 @@ them. Behaviours the reference has no switch for have none here either: the
 child-orphan delete runs in every batch's child rewrite, finalize always
 asserts PK integrity, and every data commit vacuums its table.
 
-Note the reference defines ``finalize_concurrency`` (default 3,
+The reference defines ``finalize_concurrency`` (default 3,
 ``src/Config.ts:32``) but its finalize pool actually uses ``batch_size``
-(``src/processStream.ts:161``). We take the *documented* meaning.
+(``src/processStream.ts:161``). Here one pool bound, ``merge_concurrency``,
+serves the batch merges and finalize alike.
 """
 
 from __future__ import annotations
@@ -48,14 +49,10 @@ class Config:
     #: 100 TB you want O(10k) buckets so a bucket is a few hundred MB.
     n_buckets: int = 32
 
-    #: Documented-but-unused in the reference; here it bounds how many
-    #: streams finalize concurrently (driver-side thread pool submitting
-    #: independent Spark jobs).
-    finalize_concurrency: int = 3
-
-    #: How many streams' merges run concurrently WITHIN a batch, and how many
+    #: How many streams' merges run concurrently WITHIN a batch, how many
     #: table writes of one stream (its root merge and child rewrites) run
-    #: concurrently (driver-side thread pools, the finalize pattern): the
+    #: concurrently, and how many streams finalize concurrently (driver-side
+    #: thread pools submitting independent Spark jobs): the
     #: writes touch disjoint tables and share only the read-only parse
     #: cache, so a multi-stream tap (the reference's stream_1 shape is 21
     #: tables) or a root with several children keeps the cluster busy

@@ -9,9 +9,8 @@ offset) is applied as:
 2. per stream: cleaning-column wipes for first-seen values (reference D5),
    then shred (``shred.shred_stream``) and one write per table — the root's
    MERGE/append and each child's rewrite (or append) run concurrently, since
-   a child's orphans are judged from the batch alone — then the commits,
-   children before the root so a crash replays only the not-yet-committed
-   tables;
+   a child's orphans are judged from the batch alone — then one atomic
+   commit of all the stream's tables;
 3. buffered hard deletes (reference D4) apply after the inserts of the same
    commit window, matching the reference's flush order
    (``StreamProcessor.ts:87-95``);
@@ -19,9 +18,11 @@ offset) is applied as:
    commit (≙ echoing state to stdout only after buffers flushed,
    ``processStream.ts:104-114``).
 
-Exactly-once: every table snapshot records ``last_applied_seq``; a replayed
-batch (same run, max seq <= recorded) is skipped per table, so a crash
-between table commits reconverges on replay. Versions derive from the source
+Exactly-once: every table snapshot records ``last_applied_seq``, and a
+stream's tables commit together (``LakeCatalog.commit_snapshot``; a crash
+between their pointer flips is rolled forward when the next engine starts),
+so a replayed batch (same run, max seq <= recorded) is skipped whole or
+applied whole. Versions derive from the source
 offset (``_ver = run_seq_base + _seq + 1``), so a replay regenerates
 identical versions — the Spark-native upgrade over the reference's
 in-memory ``maxVer`` counter (``StreamProcessor.ts:56-61``).
@@ -50,6 +51,7 @@ from .lake.catalog import (
     DROPPED_TABLE_PREFIX,
     LakeCatalog,
     TableSnapshot,
+    write_json,
 )
 from .lake import merge as M
 from .schema.inspector import PKType, TableMeta, build_meta
@@ -239,6 +241,7 @@ class SingerEngine:
         self.spark = spark
         self.config = config or Config()
         self.catalog = LakeCatalog(self.config.lake_root, spark)
+        self.catalog.roll_forward()
         self.run_id = run_id or uuid.uuid4().hex
         self.streams: dict[str, StreamState] = {}
         #: the metrics record of the ``apply_lines`` call in progress; pool
@@ -351,7 +354,7 @@ class SingerEngine:
             snap = self.catalog.drop_column(col.name, snap)
             dirty = True
         if dirty:
-            self.catalog.commit_snapshot(meta.table_name, snap)
+            self.catalog.commit_snapshot({meta.table_name: snap})
 
     # --------------------------------------------------------------- messages
     def _streams_dir(self) -> str:
@@ -364,15 +367,11 @@ class SingerEngine:
         stream metas whose SCHEMA message lives in an already-committed
         micro-batch (the reference re-receives SCHEMA every run; a resumed
         checkpoint does not)."""
-        path = os.path.join(self._streams_dir(), f"{msg['stream']}.json")
-        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {k: msg.get(k) for k in
-                 ("stream", "schema", "key_properties", "cleaning_column", "all_key_properties")},
-                fh,
-            )
-        os.replace(tmp, path)
+        write_json(
+            os.path.join(self._streams_dir(), f"{msg['stream']}.json"),
+            {k: msg.get(k) for k in
+             ("stream", "schema", "key_properties", "cleaning_column", "all_key_properties")},
+        )
 
     def _recover_stream(self, stream: str) -> bool:
         path = os.path.join(self._streams_dir(), f"{stream}.json")
@@ -438,20 +437,21 @@ class SingerEngine:
             if not matches and not dropped and not archived:
                 self.catalog.rename_table(table, f"{DROPPED_TABLE_PREFIX}{table}")
 
-    def _commit(self, name: str, snap: TableSnapshot) -> None:
-        """Commit a data-rewriting snapshot, then vacuum the table down to
-        its last two snapshots, so a table never holds more than two
-        generations of files however long the replay. Every data commit goes
-        through here (a child's batch rewrite, restore or sweep, a cleaning
-        wipe, the root merge), always inside ``apply_lines`` and on the
-        stream's own thread, while no other write of the table runs.
-        ``retain_last=2`` keeps the README's pinning contract (a lazy frame
-        stays readable for one further commit of its table) and the previous
-        manifest a crashed child is restored from."""
+    def _commit(self, snaps: dict[str, TableSnapshot]) -> None:
+        """Commit one stream's data-rewriting snapshots (``{table: snap}``)
+        in one atomic step, then vacuum each table down to its last two
+        snapshots, so a table never holds more than two generations of files
+        however long the replay. Every data commit goes through here (a
+        batch's root merge with its child rewrites, a cleaning wipe with its
+        child sweep), always inside ``apply_lines`` and on the stream's own
+        thread, while no other write of the tables runs. ``retain_last=2``
+        keeps the README's pinning contract: a lazy frame stays readable for
+        one further commit of its table."""
         with self._phase("commit_io"):
-            self.catalog.commit_snapshot(name, snap)
+            self.catalog.commit_snapshot(snaps)
         with self._phase("vacuum"):
-            self.catalog.vacuum(name, retain_last=2)
+            for name in snaps:
+                self.catalog.vacuum(name, retain_last=2)
 
     # ----------------------------------------------------------- apply (core)
     def _run_base(self, snap: TableSnapshot, batch_min_seq: int) -> tuple[int, int]:
@@ -594,15 +594,14 @@ class SingerEngine:
                 snap = self.catalog.snapshot(meta.table_name)
                 snap = M.delete_where(self.catalog, meta.table_name, cond, snap=snap)
                 snap.cleaned_values = sorted(state.cleaned_values | new_vals)
-                self._commit(meta.table_name, snap)
+                # The wipe rewrote root rows across ALL buckets; the
+                # per-batch orphan delete below only covers this batch's
+                # touched buckets, so the children are swept table-wide
+                # against the wiped root and commit with it, or wiped roots
+                # would leave permanently stale child rows (reference
+                # finalize deleteChildDuplicates semantics).
+                self._commit({meta.table_name: snap, **self._delete_orphans(meta, snap)})
                 state.cleaned_values |= new_vals
-                if meta.children:
-                    # The wipe rewrote root rows across ALL buckets; the
-                    # per-batch orphan delete below only covers this batch's
-                    # touched buckets, so sweep children table-wide now or
-                    # wiped roots would leave permanently stale child rows
-                    # (reference finalize deleteChildDuplicates semantics).
-                    self._delete_orphans(meta)
 
         # The stream's records are not cached: its table writes run at once
         # and each would start its own job to fill the empty cache. They
@@ -652,21 +651,21 @@ class SingerEngine:
         # Per-batch D3 (fused): one rewrite per child adds its batch rows and
         # drops the orphans, judged from the batch's own root rows
         # (``M.orphan_delete``), so no child waits for the root's merge. That
-        # rule assumes the child matches the committed root. A child stamped
-        # with another run or offset than the root (a crash between its
-        # commit and the root's that no replay repaired) gets back its
-        # previous manifest when that one matches the root, else is swept
-        # against the committed root. A child no batch wrote yet (no run id)
+        # rule assumes the child matches the committed root, which the
+        # stream's atomic commits keep: a child stamped with another run or
+        # offset than the root comes from a torn lake, and is refused rather
+        # than left with orphans. A child no batch wrote yet (no run id)
         # matches any root.
         children = []
         root_stamp = (root_snap.run_id, root_snap.last_applied_seq)
         for node in list(meta.walk())[1:]:
             with self._phase("snap_io"):
                 snap = self.catalog.snapshot(node.table_name)
-            if snap.run_id == self.run_id and snap.last_applied_seq >= hi:
-                continue  # replay: this child already has the batch
             if fused and snap.run_id and (snap.run_id, snap.last_applied_seq) != root_stamp:
-                snap = self._restore_child(meta, node, snap, root_snap)
+                raise RuntimeError(
+                    f"[{meta.prop}] child {node.table_name} is stamped "
+                    f"{(snap.run_id, snap.last_applied_seq)}, its root {root_stamp}"
+                )
             children.append((node, snap))
 
         def write(item):
@@ -684,20 +683,13 @@ class SingerEngine:
                 return M.append_rows(self.catalog, node.table_name, shredded[node.table_name], snap=snap)
 
         # The root and every child write at once; nothing commits until all
-        # of them have written. Children commit first, root last: the root's
-        # last_applied_seq is the batch barrier, so a replay after a partial
-        # crash re-applies only the tables that didn't commit.
-        root_snap, *child_snaps = _run_all(
-            self.spark, write, [(meta, root_snap)] + children, self.config.merge_concurrency
-        )
-        for (node, _), snap in zip(children, child_snaps):
-            snap.last_applied_seq = hi
-            snap.run_id = self.run_id
-            self._commit(node.table_name, snap)
-        root_snap.last_applied_seq = hi
-        root_snap.run_seq_base = run_base
-        root_snap.run_id = self.run_id
-        self._commit(meta.table_name, root_snap)
+        # of them have written.
+        items = [(meta, root_snap)] + children
+        snaps = _run_all(self.spark, write, items, self.config.merge_concurrency)
+        for snap in snaps:
+            snap.last_applied_seq, snap.run_seq_base, snap.run_id = hi, run_base, self.run_id
+        self._commit({node.table_name: snap for (node, _), snap in zip(items, snaps)})
+        root_snap = snaps[0]
         # parquet footers read driver-side: lineage adds NO Spark job
         with self._phase("lineage"):
             rows_after = self.catalog.footer_row_count(
@@ -720,42 +712,18 @@ class SingerEngine:
         with self._metrics_lock:
             self._batch["streams"].append(entry)
 
-    def _delete_orphans(self, meta: TableMeta, nodes=None, root_snap=None) -> list[TableSnapshot]:
+    def _delete_orphans(self, meta: TableMeta, root_snap: TableSnapshot) -> dict[str, TableSnapshot]:
         """Reference D3 (StreamProcessor.ts:148-169) over whole tables: sweep
-        each child in ``nodes`` (default: all) against the committed root and
-        commit it stamped with the root's run and offset, which it now
-        matches. Returns the children's new snapshots."""
-        root_snap = root_snap or self.catalog.snapshot(meta.table_name)
-        root_df = self.catalog.read(meta.table_name, snap=root_snap)
-        snaps = []
-        for node in nodes or list(meta.walk())[1:]:
+        every child against the root snapshot ``root_snap`` and stamp it with
+        the root's run and offset, which it then matches. Returns the
+        children's uncommitted snapshots by table."""
+        snaps = {}
+        for node in list(meta.walk())[1:]:
             with self._phase("child_write"):
-                snap = self._drop_orphans(meta, node, root_df)
+                snap = self._drop_orphans(meta, node, self.catalog.read(meta.table_name, snap=root_snap))
             snap.run_id, snap.last_applied_seq = root_snap.run_id, root_snap.last_applied_seq
-            self._commit(node.table_name, snap)
-            snaps.append(snap)
+            snaps[node.table_name] = snap
         return snaps
-
-    def _restore_child(self, meta: TableMeta, node: TableMeta, snap: TableSnapshot,
-                       root_snap: TableSnapshot) -> TableSnapshot:
-        """Bring a child stamped ahead of its committed root back in line.
-        Its commit already dropped the rows of every key the uncommitted
-        batch wrote, so a sweep would lose them for good. When the previous
-        manifest (kept by the vacuum's ``retain_last=2``) carries the root's
-        stamp, commit that manifest's files as the next snapshot: a pointer
-        flip, no Spark job. Otherwise sweep against the committed root."""
-        stamp = (root_snap.run_id, root_snap.last_applied_seq)
-        with self._phase("snap_io"):
-            try:
-                prev = self.catalog.snapshot(node.table_name, snap.snapshot_id - 1)
-            except FileNotFoundError:  # expired by a vacuum with retain_last=1
-                prev = None
-        if prev is None or (prev.run_id, prev.last_applied_seq) != stamp:
-            (snap,) = self._delete_orphans(meta, [node], root_snap)
-            return snap
-        prev.snapshot_id = snap.snapshot_id
-        self._commit(node.table_name, prev)
-        return prev
 
     def _drop_orphans(self, meta, node, root_df, buckets=None, snap=None, new_rows=None) -> TableSnapshot:
         return M.orphan_delete(
@@ -1014,11 +982,7 @@ class SingerEngine:
             self._retire_inactive(active_streams)
 
     def _write_state(self, value) -> None:
-        path = os.path.join(self.config.lake_root, "_state.json")
-        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(value, fh)
-        os.replace(tmp, path)
+        write_json(os.path.join(self.config.lake_root, "_state.json"), value)
 
     def read_state(self):
         path = os.path.join(self.config.lake_root, "_state.json")
@@ -1033,7 +997,7 @@ class SingerEngine:
         integrity assert (dedup happened at merge time, and every batch's
         child rewrite already dropped the orphans). Skipped for streams that
         started clean, like the reference. Streams finalize concurrently (F3,
-        ``finalize_concurrency``) — independent Spark jobs submitted from a
+        ``merge_concurrency``) — independent Spark jobs submitted from a
         driver-side thread pool. Finalize reads only, so it commits nothing."""
 
         def finalize_stream(state: StreamState) -> None:
@@ -1044,7 +1008,7 @@ class SingerEngine:
                 if keys:
                     M.assert_pk_integrity(self.catalog, node.table_name, keys=keys)
 
-        _run_all(self.spark, finalize_stream, list(self.streams.values()), self.config.finalize_concurrency)
+        _run_all(self.spark, finalize_stream, list(self.streams.values()), self.config.merge_concurrency)
 
     # ------------------------------------------------------------ file replay
     def run_file(self, path: str) -> None:

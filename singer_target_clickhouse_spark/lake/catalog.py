@@ -10,6 +10,8 @@ Layout per table::
         _pointer.json          -> {"current": "snap-000042.json"}   (os.replace = atomic)
         snap-<n>.json          -> TableSnapshot manifest
         data/<commit-uuid>/_bucket=<k>/part-*.parquet
+    <root>/_txn/<uuid>.json    -> [[table, manifest], ...] while a multi-table
+                                  commit flips its pointers
 
 Scale design:
 
@@ -23,7 +25,10 @@ Scale design:
   bucket-for-bucket.
 - **Atomic commits.** A snapshot is immutable; the pointer file flips with
   ``os.replace`` after all parquet is on disk. Readers resolve the pointer
-  once and read a consistent file set. Replayed batches are gated on
+  once and read a consistent file set. A commit of several tables names
+  every new manifest in one intent file before it flips the pointers; a
+  writer starting up rolls a left-over intent forward, so the tables move
+  together. Replayed batches are gated on
   ``last_applied_seq`` recorded in the snapshot, which is the exactly-once
   mechanism (idempotent re-apply ≙ reference's STATE checkpoint barrier,
   ``processStream.ts:104-114``).
@@ -121,16 +126,29 @@ class TableSnapshot:
         return TableSnapshot(**d)
 
 
+def write_json(path: str, obj) -> None:
+    """Replace ``path`` by ``obj`` as JSON in one ``os.replace``."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
 class LakeCatalog:
     def __init__(self, root: str, spark: SparkSession):
         self.root = root
         self.spark = spark
         os.makedirs(self._tables_dir, exist_ok=True)
+        os.makedirs(self._txn_dir, exist_ok=True)
 
     # ------------------------------------------------------------------ paths
     @property
     def _tables_dir(self) -> str:
         return os.path.join(self.root, "tables")
+
+    @property
+    def _txn_dir(self) -> str:
+        return os.path.join(self.root, "_txn")
 
     def _table_dir(self, name: str) -> str:
         return os.path.join(self._tables_dir, name)
@@ -146,15 +164,10 @@ class LakeCatalog:
     def table_exists(self, name: str) -> bool:
         return os.path.exists(os.path.join(self._table_dir(name), "_pointer.json"))
 
-    def snapshot(self, name: str, snapshot_id: Optional[int] = None) -> TableSnapshot:
-        """The current snapshot, or the manifest ``snapshot_id`` while a
-        vacuum still keeps it (``FileNotFoundError`` once it is expired)."""
+    def snapshot(self, name: str) -> TableSnapshot:
         tdir = self._table_dir(name)
-        if snapshot_id is None:
-            with open(os.path.join(tdir, "_pointer.json")) as fh:
-                manifest = json.load(fh)["current"]
-        else:
-            manifest = f"snap-{snapshot_id:06d}.json"
+        with open(os.path.join(tdir, "_pointer.json")) as fh:
+            manifest = json.load(fh)["current"]
         with open(os.path.join(tdir, manifest)) as fh:
             return TableSnapshot.from_json(json.load(fh))
 
@@ -172,7 +185,7 @@ class LakeCatalog:
         if self.table_exists(name):
             raise ValueError(f"table {name} already exists")
         snap = TableSnapshot(
-            snapshot_id=0,
+            snapshot_id=-1,  # the commit numbers it 0
             schema_json=schema.jsonValue(),
             ch_columns=ch_columns,
             pk=pk,
@@ -183,7 +196,7 @@ class LakeCatalog:
         )
         tdir = self._table_dir(name)
         os.makedirs(os.path.join(tdir, "data"), exist_ok=True)
-        self._commit(name, snap)
+        self.commit_snapshot({name: snap})
         return snap
 
     def drop_table(self, name: str) -> None:
@@ -196,20 +209,44 @@ class LakeCatalog:
         File references are table-relative, so a directory move suffices."""
         os.rename(self._table_dir(name), self._table_dir(new_name))
 
-    def _commit(self, name: str, snap: TableSnapshot) -> None:
-        """Atomically publish a snapshot: manifest first, then pointer flip."""
-        tdir = self._table_dir(name)
-        manifest = f"snap-{snap.snapshot_id:06d}.json"
-        with open(os.path.join(tdir, manifest), "w") as fh:
-            json.dump(snap.to_json(), fh)
-        tmp = os.path.join(tdir, f"_pointer.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"current": manifest}, fh)
-        os.replace(tmp, os.path.join(tdir, "_pointer.json"))
+    def commit_snapshot(self, snaps: dict[str, TableSnapshot]) -> None:
+        """Publish the next snapshot of every table in ``snaps`` as one atomic
+        step: write each manifest, then flip each pointer. Flipping several
+        pointers is not atomic by itself, so a commit of more than one table
+        first names every ``(table, manifest)`` in an intent file under
+        ``<root>/_txn`` and removes it after the last flip; a crash in
+        between leaves the intent for ``roll_forward``."""
+        flips = []
+        for name, snap in snaps.items():
+            snap.snapshot_id += 1
+            manifest = f"snap-{snap.snapshot_id:06d}.json"
+            with open(os.path.join(self._table_dir(name), manifest), "w") as fh:
+                json.dump(snap.to_json(), fh)
+            flips.append((name, manifest))
+        intent = None
+        if len(flips) > 1:
+            intent = os.path.join(self._txn_dir, f"{uuid.uuid4().hex}.json")
+            write_json(intent, flips)
+        self._flip(flips)
+        if intent:
+            os.remove(intent)
 
-    def commit_snapshot(self, name: str, snap: TableSnapshot) -> None:
-        snap.snapshot_id += 1
-        self._commit(name, snap)
+    def _flip(self, flips: list) -> None:
+        for name, manifest in flips:
+            write_json(os.path.join(self._table_dir(name), "_pointer.json"), {"current": manifest})
+
+    def roll_forward(self) -> None:
+        """Finish the commits a crash left between their intent file and
+        their last pointer flip. Flips are idempotent, so an interrupted
+        roll-forward just runs again. Only a writer calls this, at start-up,
+        while no commit of this lake runs; a reader sees the last state a
+        commit left."""
+        for entry in sorted(os.listdir(self._txn_dir)):
+            path = os.path.join(self._txn_dir, entry)
+            if entry.endswith(".json"):
+                with open(path) as fh:
+                    self._flip(json.load(fh))
+            os.remove(path)  # an intent's unfinished .tmp was never flipped
 
     # ------------------------------------------------------------------ reads
     def _abs_files(self, name: str, files: list[str]) -> list[str]:
@@ -338,9 +375,8 @@ class LakeCatalog:
         ``retain_last=1`` keeps only the current snapshot's files — callers
         must then ensure no reader is pinned to an older snapshot (same
         contract as Iceberg snapshot expiry). The engine uses
-        ``retain_last=2``: a lazy DataFrame read from the previous snapshot
-        stays readable, and the previous manifest stays restorable. Returns
-        removal counts."""
+        ``retain_last=2`` so that a lazy DataFrame read from the previous
+        snapshot stays readable. Returns removal counts."""
         snap = self.snapshot(name)
         tdir = self._table_dir(name)
         keep_ids = {snap.snapshot_id - i for i in range(max(retain_last, 1))}

@@ -144,7 +144,8 @@ def orphan_delete(
     key, and a batch row if its root row is its key's last in the batch and
     not a tombstone. This equals the semi-join against the merged root when
     every batch ``_ver`` is above every committed root ``_ver`` and the child
-    matched the committed root before the batch; the engine checks both.
+    matched the committed root before the batch. The stream's atomic commits
+    keep both true, and the engine refuses a batch where either fails.
     """
     snap = snap or catalog.snapshot(child_name)
     child = catalog.read(child_name, buckets=buckets, snap=snap)

@@ -12,8 +12,8 @@ Exactly-once across restarts:
 - a sidecar ``seq_base.json`` in the checkpoint dir records the global
   sequence base per ``batch_id`` *before* the apply, so a redelivered batch
   re-derives identical ``_seq`` values (and therefore identical ``_ver``);
-- the engine's per-table ``last_applied_seq`` gate then makes the re-apply
-  a no-op for tables that already committed.
+- the engine's ``last_applied_seq`` gate then makes the re-apply a no-op
+  for streams that already committed it (a stream's tables commit as one).
 
 Run-id is pinned to the checkpoint dir, so a restarted job continues the
 same run (same version base) instead of re-basing like a fresh run would.

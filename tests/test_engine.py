@@ -743,7 +743,7 @@ def test_per_batch_orphan_delete_leaves_no_orphans(spark, lake, monkeypatch):
     e.apply_lines(_mk_lines(spark, batch(2), 100))
     e.apply_lines(_mk_lines(spark, last, 200))
     commits = []
-    monkeypatch.setattr(SingerEngine, "_commit", lambda self, name, snap: commits.append(name))
+    monkeypatch.setattr(SingerEngine, "_commit", lambda self, snaps: commits.append(snaps))
     e.finalize()
     assert commits == []
     # superseded root versions must leave no child orphans

@@ -230,6 +230,49 @@ def test_storage_stays_within_two_generations(spark, tmp_path):
             assert on_disk <= 2.2 * live, (i, t, on_disk / live)
 
 
+def test_multi_table_commit_rolls_forward(spark, tmp_path, monkeypatch):
+    # A commit of several tables names their manifests in one intent file
+    # under <lake>/_txn before it flips their pointers. A crash after the
+    # first flip leaves the tables torn and the intent in place; a reader
+    # sees the torn state, and the next writer's start-up flips the rest and
+    # removes the intent.
+    from pyspark.sql import types as T
+
+    from singer_target_clickhouse_spark.lake import catalog as C
+
+    lake = str(tmp_path / "lake")
+    cat = C.LakeCatalog(lake, spark)
+    schema = T.StructType([T.StructField("k", T.StringType())])
+    snaps = {t: cat.create_table(t, schema=schema, ch_columns=[], pk=[], order_by=[],
+                                 engine="plain", bucket_by=[], n_buckets=1)
+             for t in ("a", "b", "c")}
+    orig = C.write_json
+
+    def write_json(path, obj):
+        orig(path, obj)
+        if path.endswith("_pointer.json"):
+            raise RuntimeError("injected after the first pointer flip")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(C, "write_json", write_json)
+        with pytest.raises(RuntimeError, match="injected"):
+            cat.commit_snapshot(snaps)
+    txn = os.path.join(lake, "_txn")
+
+    def ids():
+        return [C.LakeCatalog(lake, spark).snapshot(t).snapshot_id for t in ("a", "b", "c")]
+
+    assert ids() == [1, 0, 0]
+    assert len(os.listdir(txn)) == 1
+    SingerEngine(spark, Config(lake_root=lake))
+    assert ids() == [1, 1, 1]
+    assert os.listdir(txn) == []
+    # the rolled-forward snapshots commit on as usual
+    cat.commit_snapshot(snaps)
+    assert ids() == [2, 2, 2]
+    assert os.listdir(txn) == []
+
+
 def test_merge_upsert_latest_wins_golden(spark, tmp_path):
     # merge_upsert keeps the max-_ver row per key over target ∪ batch across
     # inserts, updates, tombstones, a same-batch record+tombstone sequence,
@@ -274,7 +317,7 @@ def test_merge_upsert_latest_wins_golden(spark, tmp_path):
     )
     for rows in batches:
         snap = M.merge_upsert(cat, "t", batch_df(rows), snap=snap)
-        cat.commit_snapshot("t", snap)
+        cat.commit_snapshot({"t": snap})
     got = sorted(map(tuple, cat.read("t").collect()), key=lambda r: (r[0] is None, r))
     # the merged content is what ordered CDC semantics demand
     assert got == [("a", "3", 13), ("b", "2", 11), ("d", "2", 22)]

@@ -12,7 +12,7 @@ import pytest
 from singer_target_clickhouse_spark.config import Config
 from singer_target_clickhouse_spark.engine import SingerEngine
 from singer_target_clickhouse_spark.gen import REPO_SCHEMA_MESSAGE, REPO_STREAM
-from singer_target_clickhouse_spark.lake import merge
+from singer_target_clickhouse_spark.lake import catalog, merge
 from singer_target_clickhouse_spark.lake.catalog import LakeCatalog
 from singer_target_clickhouse_spark.streaming import StreamingDriver
 
@@ -134,21 +134,32 @@ def _drive(spark, root, batches):
 
 def _tk_run(spark, root, mp=None, calls=None, crash=None):
     """Run a driver over ``_TK_LOG`` under ``root``. With ``mp``, every
-    ``SingerEngine._commit`` call appends its table to ``calls``, and
-    ``crash=(n, when)`` raises just "before" or "after" the n-th call."""
+    ``SingerEngine._commit`` call appends its sorted tables to ``calls``, and
+    ``crash=(n, when)`` raises just "before" or "after" the n-th call, or,
+    with an integer ``when`` k, right after that call's k-th pointer flip."""
     if mp is not None:
-        orig = SingerEngine._commit
+        orig, orig_write = SingerEngine._commit, catalog.write_json
+        flips = []
 
-        def commit(self, name, snap):
+        def commit(self, snaps):
             n = len(calls)
             if crash == (n, "before"):
                 raise _Crash(f"injected before _commit call {n}")
-            calls.append(name)
-            orig(self, name, snap)
+            calls.append(sorted(snaps))
+            orig(self, snaps)
             if crash == (n, "after"):
                 raise _Crash(f"injected after _commit call {n}")
 
+        def write_json(path, obj):
+            orig_write(path, obj)
+            if crash[0] == len(calls) - 1 and os.path.basename(path) == "_pointer.json":
+                flips.append(path)
+                if len(flips) == crash[1]:
+                    raise _Crash(f"injected after pointer flip {len(flips)}")
+
         mp.setattr(SingerEngine, "_commit", commit)
+        if crash is not None:
+            mp.setattr(catalog, "write_json", write_json)
     _drive(spark, root, _TK_LOG)
 
 
@@ -170,16 +181,17 @@ class _Crash(RuntimeError):
     pass
 
 
-@pytest.mark.parametrize("when", ["before", "after"])
+@pytest.mark.parametrize("when", ["before", "flip", "after"])
 def test_crash_in_last_batch_converges(spark, tmp_path, monkeypatch, when):
-    # Exactly-once under a crash inside the last batch's commit sequence.
-    # The uninterrupted run counts the batch's SingerEngine._commit calls;
-    # "before" raises just before each of them in turn, "after" raises once
-    # after the last one returns, before _state.json is written. After each
-    # crash a fresh driver restarts on the same lake and checkpoint, and the
-    # result must equal the uninterrupted run's tables (_ver included) and
-    # _state.json. The cases come from the measured count, so they cover
-    # every commit point of whichever commit sequence the engine runs.
+    # Exactly-once under a crash inside the last batch's commit. The
+    # uninterrupted run counts the batch's SingerEngine._commit calls (one:
+    # the stream's tables commit together); "before" raises just before
+    # each of them in turn, "flip" raises right after each pointer flip k of
+    # the n tables the last call commits, and "after" raises once after the
+    # last call returns, before _state.json is written. After each crash a
+    # fresh driver restarts on the same lake and checkpoint, and the result
+    # must equal the uninterrupted run's tables (_ver included) and
+    # _state.json.
     calls, starts = [], []
     orig_apply = SingerEngine.apply_lines
 
@@ -193,47 +205,123 @@ def test_crash_in_last_batch_converges(spark, tmp_path, monkeypatch, when):
     assert len(starts) == len(_TK_LOG)
     want = _lake_digest(spark, str(tmp_path / "ref" / "lake"))
     assert want["_state.json"] == {"pos": 2}
-    first, n_last = starts[-1], len(calls) - starts[-1]
-    assert set(calls[first:]) == {"tk", "tk__tags"}
+    first, last = starts[-1], len(calls) - 1
+    assert calls[first:] == [["tk", "tk__tags"]]
 
-    points = range(first, first + n_last) if when == "before" else [first + n_last - 1]
-    for n in points:
-        root = tmp_path / f"{when}{n}"
+    cases = {
+        "before": [(n, "before") for n in range(first, last + 1)],
+        "flip": [(last, k) for k in range(1, len(calls[last]) + 1)],
+        "after": [(last, "after")],
+    }[when]
+    for crash in cases:
+        root = tmp_path / f"{crash[0]}-{crash[1]}"
         with monkeypatch.context() as mp:
             with pytest.raises(Exception, match="injected"):
-                _tk_run(spark, root, mp, [], crash=(n, when))
+                _tk_run(spark, root, mp, [], crash=crash)
         _tk_run(spark, root)
         assert _lake_digest(spark, str(root / "lake")) == want, (
-            f"no convergence after a crash {when} _commit call {n - first} of the last batch"
+            f"no convergence after a crash at {crash} in the last batch"
         )
+        assert os.listdir(root / "lake" / "_txn") == []
 
 
-def test_unreplayed_crash_leaves_no_orphans(spark, tmp_path, monkeypatch):
-    # A crash between a child's commit and its root's leaves the child ahead
-    # of the root. When the next run does not replay that batch, the child
-    # must be brought back to the committed root before its next rewrite, or
-    # the rows the uncommitted batch wrote stay as orphans and the rows it
-    # replaced are lost.
-    cfg = Config(lake_root=str(tmp_path / "lake"), n_buckets=4)
+def test_crash_in_vacuum_converges(spark, tmp_path, monkeypatch):
+    # The last batch's commit vacuums each table it wrote. A crash right
+    # after that vacuum's first os.remove leaves unreferenced files and the
+    # batch unacknowledged; a restart must still converge.
+    _drive(spark, tmp_path / "ref", _TK_LOG)
+    want = _lake_digest(spark, str(tmp_path / "ref" / "lake"))
+    root = tmp_path / "crash"
+    tables = str(root / "lake" / "tables")
+    calls, removed = [], []
+    orig_commit, orig_remove = SingerEngine._commit, os.remove
 
+    def commit(self, snaps):
+        calls.append(sorted(snaps))
+        orig_commit(self, snaps)
+
+    def remove(path, *args, **kwargs):
+        orig_remove(path, *args, **kwargs)
+        if len(calls) == len(_TK_LOG) and str(path).startswith(tables):
+            removed.append(path)
+            raise _Crash("injected after the vacuum's first os.remove")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(SingerEngine, "_commit", commit)
+        mp.setattr(os, "remove", remove)
+        with pytest.raises(Exception, match="injected"):
+            _drive(spark, root, _TK_LOG)
+    # one commit per batch, and the crash fell inside the last one's vacuum
+    assert calls == [["tk", "tk__tags"]] * len(_TK_LOG) and len(removed) == 1
+    _drive(spark, root, _TK_LOG)
+    assert _lake_digest(spark, str(root / "lake")) == want
+
+
+@pytest.mark.parametrize("when", ["before", "after"])
+def test_crash_around_seq_base_converges(spark, tmp_path, monkeypatch, when):
+    # A plain log keeps each micro-batch's sequence base in seq_base.json.
+    # A crash just before or just after the last batch's base is written
+    # must converge on restart: the redelivered batch gets the same base.
+    _drive(spark, tmp_path / "ref", _TK_LOG)
+    want = _lake_digest(spark, str(tmp_path / "ref" / "lake"))
+    last = len(_TK_LOG) - 1
+    orig = StreamingDriver._seq_base_for
+
+    def seq_base_for(self, batch_id, batch_count):
+        if batch_id == last and when == "before":
+            raise _Crash("injected before seq_base.json is written")
+        base = orig(self, batch_id, batch_count)
+        if batch_id == last:
+            raise _Crash("injected after seq_base.json is written")
+        return base
+
+    root = tmp_path / "crash"
+    with monkeypatch.context() as mp:
+        mp.setattr(StreamingDriver, "_seq_base_for", seq_base_for)
+        with pytest.raises(Exception, match="injected"):
+            _drive(spark, root, _TK_LOG)
+    with open(root / "ckpt" / "seq_base.json") as fh:
+        assert (str(last) in json.load(fh)) == (when == "after")
+    _drive(spark, root, _TK_LOG)
+    assert _lake_digest(spark, str(root / "lake")) == want
+
+
+def _unreplayed_crash(spark, cfg, monkeypatch, crashed, after_intent):
+    """Commit 20 ``tk`` keys tagged ``a{i}``, then apply ``crashed`` with a
+    crash in its commit: just before the intent file is written, or just
+    after it (before any pointer flip)."""
     def lines(msgs, base):
         return spark.createDataFrame(
             [(json.dumps(m), base + i) for i, m in enumerate(msgs)], "value string, _seq long")
 
     SingerEngine(spark, cfg).apply_lines(lines([_TK_SCHEMA] + [_tk(i, f"a{i}") for i in range(20)], 0))
-    orig = SingerEngine._commit
+    orig = catalog.write_json
 
-    def commit(self, name, snap):
-        if name == "tk":
-            raise _Crash("injected before the root commit")
-        orig(self, name, snap)
+    def write_json(path, obj):
+        intent = os.path.basename(os.path.dirname(path)) == "_txn"
+        if intent and not after_intent:
+            raise _Crash("injected before the intent file")
+        orig(path, obj)
+        if intent:
+            raise _Crash("injected after the intent file")
 
     with monkeypatch.context() as mp:
-        mp.setattr(SingerEngine, "_commit", commit)
+        mp.setattr(catalog, "write_json", write_json)
         with pytest.raises(_Crash):
-            SingerEngine(spark, cfg).apply_lines(lines([_tk(i, f"b{i}") for i in range(20)], 100))
+            SingerEngine(spark, cfg).apply_lines(lines(crashed, 100))
     e = SingerEngine(spark, cfg)
-    e.apply_lines(lines([_tk(0, "c0")], 200))
+    return e, lambda: e.apply_lines(lines([_tk(0, "c0")], 200))
+
+
+def test_unreplayed_crash_leaves_no_orphans(spark, tmp_path, monkeypatch):
+    # A crash inside a batch's commit, before the intent file, publishes no
+    # table of the batch. When the next run does not replay that batch, the
+    # child must still match the committed root: no rows the uncommitted
+    # batch wrote stay as orphans, and no committed rows are lost.
+    cfg = Config(lake_root=str(tmp_path / "lake"), n_buckets=4)
+    e, apply_next = _unreplayed_crash(
+        spark, cfg, monkeypatch, [_tk(i, f"b{i}") for i in range(20)], after_intent=False)
+    apply_next()
 
     root = e.catalog.read("tk").selectExpr("id AS _root_id", "_ver AS _root_ver")
     child = e.catalog.read("tk__tags")
@@ -245,31 +333,33 @@ def test_unreplayed_crash_leaves_no_orphans(spark, tmp_path, monkeypatch):
 
 
 def test_unreplayed_crash_restores_emptied_child(spark, tmp_path, monkeypatch):
-    # As above, but the crashed batch emptied the child: its previous rows
-    # must come back although the child it left ahead has no files.
+    # As above, but the crashed batch empties the child: its committed rows
+    # stay, since the emptied child was never published.
     cfg = Config(lake_root=str(tmp_path / "lake"), n_buckets=4)
-
-    def lines(msgs, base):
-        return spark.createDataFrame(
-            [(json.dumps(m), base + i) for i, m in enumerate(msgs)], "value string, _seq long")
-
-    SingerEngine(spark, cfg).apply_lines(lines([_TK_SCHEMA] + [_tk(i, f"a{i}") for i in range(20)], 0))
-    orig = SingerEngine._commit
-
-    def commit(self, name, snap):
-        if name == "tk":
-            raise _Crash("injected before the root commit")
-        orig(self, name, snap)
-
-    with monkeypatch.context() as mp:
-        mp.setattr(SingerEngine, "_commit", commit)
-        with pytest.raises(_Crash):
-            SingerEngine(spark, cfg).apply_lines(lines([_tk(i) for i in range(20)], 100))
-    assert SingerEngine(spark, cfg).catalog.snapshot("tk__tags").files() == []
-    e = SingerEngine(spark, cfg)
-    e.apply_lines(lines([_tk(0, "c0")], 200))
+    e, apply_next = _unreplayed_crash(
+        spark, cfg, monkeypatch, [_tk(i) for i in range(20)], after_intent=False)
+    assert e.catalog.snapshot("tk__tags").files() != []
+    apply_next()
     got = sorted((r["_root_id"], r["t"]) for r in e.catalog.read("tk__tags").collect())
     assert got == [(0, "c0")] + [(i, f"a{i}") for i in range(1, 20)]
+
+
+def test_unreplayed_crash_after_intent_rolls_forward(spark, tmp_path, monkeypatch):
+    # A crash after the intent file, before any pointer flip: the next
+    # engine's start-up commits the crashed batch whole, in every table,
+    # before the next run applies anything.
+    cfg = Config(lake_root=str(tmp_path / "lake"), n_buckets=4)
+    e, apply_next = _unreplayed_crash(
+        spark, cfg, monkeypatch, [_tk(i, f"b{i}") for i in range(20)], after_intent=True)
+    assert os.listdir(tmp_path / "lake" / "_txn") == []
+    for t in ("tk", "tk__tags"):
+        assert e.catalog.snapshot(t).last_applied_seq == 119, t
+    assert sorted((r["_root_id"], r["t"]) for r in e.catalog.read("tk__tags").collect()) == [
+        (i, f"b{i}") for i in range(20)]
+    assert e.catalog.row_count("tk") == 20
+    apply_next()
+    got = sorted((r["_root_id"], r["t"]) for r in e.catalog.read("tk__tags").collect())
+    assert got == [(0, "c0")] + [(i, f"b{i}") for i in range(1, 20)]
 
 
 _MC_SCHEMA = {
@@ -347,4 +437,96 @@ def test_crash_in_concurrent_child_write_converges(spark, tmp_path, monkeypatch)
         assert cat.snapshot(t).last_applied_seq < ref.snapshot(t).last_applied_seq, t
 
     _drive(spark, root, _MC_LOG)
+    assert _lake_digest(spark, str(root / "lake")) == want
+
+
+def test_crash_in_one_streams_commit_converges(spark, tmp_path, monkeypatch):
+    # mc and fl apply on two pool threads. In the last batch fl's commit
+    # raises while mc commits: mc keeps the batch, fl does not, and a fresh
+    # driver must converge to the uninterrupted run.
+    _drive(spark, tmp_path / "ref", _MC_LOG)
+    want = _lake_digest(spark, str(tmp_path / "ref" / "lake"))
+
+    calls = {"mc": 0, "fl": 0}
+    both_committing = threading.Barrier(2, timeout=60)
+    orig = SingerEngine._commit
+
+    def commit(self, snaps):
+        stream = "mc" if "mc" in snaps else "fl"
+        calls[stream] += 1
+        if calls[stream] == len(_MC_LOG):
+            both_committing.wait()
+            if stream == "fl":
+                raise _Crash("injected in fl's commit")
+        orig(self, snaps)
+
+    root = tmp_path / "crash"
+    with monkeypatch.context() as mp:
+        mp.setattr(SingerEngine, "_commit", commit)
+        with pytest.raises(Exception, match="injected"):
+            _drive(spark, root, _MC_LOG)
+    ref = LakeCatalog(str(tmp_path / "ref" / "lake"), spark)
+    cat = LakeCatalog(str(root / "lake"), spark)
+    for t in ("mc", "mc__tags", "mc__notes"):
+        assert cat.snapshot(t).last_applied_seq == ref.snapshot(t).last_applied_seq, t
+    assert cat.snapshot("fl").last_applied_seq < ref.snapshot("fl").last_applied_seq
+
+    _drive(spark, root, _MC_LOG)
+    assert _lake_digest(spark, str(root / "lake")) == want
+
+
+_S_SCHEMA = {
+    "type": "SCHEMA", "stream": "s",
+    "schema": {"type": "object", "properties": {
+        "id": {"type": "integer"}, "tag": {"type": ["null", "string"]},
+        "items": {"type": ["null", "array"], "items": {"type": "object", "properties": {
+            "x": {"type": ["null", "string"]}}}}}},
+    "key_properties": ["id"], "cleaning_column": "tag",
+}
+
+
+def _s(i, tag, *xs):
+    return {"type": "RECORD", "stream": "s", "record": {"id": i, "tag": tag, "items": [{"x": x} for x in xs]}}
+
+
+def test_crash_between_wipe_and_child_sweep_converges(spark, tmp_path, monkeypatch):
+    # An earlier run commits roots tagged A..D with child rows. A pinned
+    # streaming run then sees E in batch 0 and a new A record in batch 1,
+    # whose cleaning wipe deletes key 1's root; the child sweep must drop
+    # key 1's child rows. A crash between the wipe and the sweep, then a
+    # restart of the same run, must converge to the uninterrupted run: the
+    # wipe and its sweep commit together or not at all.
+    log = [[_S_SCHEMA, _s(5, "E", "e1"), {"type": "STATE", "value": {"pos": 0}}],
+           [_s(6, "A"), {"type": "STATE", "value": {"pos": 1}}]]
+
+    def run(root):
+        root.mkdir(parents=True, exist_ok=True)
+        earlier = root / "earlier.jsonl"
+        earlier.write_text("".join(json.dumps(m) + "\n" for m in [
+            _S_SCHEMA, _s(1, "A", "x1", "x2"), _s(2, "B", "y1"), _s(3, "C", "w1"), _s(4, "D", "z1")]))
+        SingerEngine(spark, Config(lake_root=str(root / "lake"), n_buckets=4)).run_file(str(earlier))
+
+    run(tmp_path / "ref")
+    _drive(spark, tmp_path / "ref", log)
+    want = _lake_digest(spark, str(tmp_path / "ref" / "lake"))
+    got = LakeCatalog(str(tmp_path / "ref" / "lake"), spark).read("s__items").collect()
+    assert sorted((r["_root_id"], r["x"]) for r in got) == [(2, "y1"), (3, "w1"), (4, "z1"), (5, "e1")]
+
+    root = tmp_path / "crash"
+    run(root)
+    sweeps = []
+    orig = merge.orphan_delete
+
+    def orphan_delete(*args, **kwargs):
+        if kwargs.get("new_rows") is None:  # a table-wide sweep, not a batch rewrite
+            sweeps.append(args[1])
+            if len(sweeps) == len(log):
+                raise _Crash("injected between the wipe and its child sweep")
+        return orig(*args, **kwargs)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(merge, "orphan_delete", orphan_delete)
+        with pytest.raises(Exception, match="injected"):
+            _drive(spark, root, log)
+    _drive(spark, root, log)
     assert _lake_digest(spark, str(root / "lake")) == want
