@@ -181,8 +181,27 @@ class _Crash(RuntimeError):
     pass
 
 
+@pytest.fixture(scope="module")
+def tk_ref(spark, tmp_path_factory):
+    """The uninterrupted run over ``_TK_LOG``: its ``_lake_digest``, its
+    ``SingerEngine._commit`` calls (sorted tables) and the number of calls
+    made before each batch started."""
+    root = tmp_path_factory.mktemp("tk_ref")
+    calls, starts = [], []
+    orig_apply = SingerEngine.apply_lines
+
+    def apply_lines(self, lines):
+        starts.append(len(calls))
+        orig_apply(self, lines)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(SingerEngine, "apply_lines", apply_lines)
+        _tk_run(spark, root, mp, calls)
+    return _lake_digest(spark, str(root / "lake")), calls, starts
+
+
 @pytest.mark.parametrize("when", ["before", "flip", "after"])
-def test_crash_in_last_batch_converges(spark, tmp_path, monkeypatch, when):
+def test_crash_in_last_batch_converges(spark, tmp_path, monkeypatch, tk_ref, when):
     # Exactly-once under a crash inside the last batch's commit. The
     # uninterrupted run counts the batch's SingerEngine._commit calls (one:
     # the stream's tables commit together); "before" raises just before
@@ -192,18 +211,8 @@ def test_crash_in_last_batch_converges(spark, tmp_path, monkeypatch, when):
     # fresh driver restarts on the same lake and checkpoint, and the result
     # must equal the uninterrupted run's tables (_ver included) and
     # _state.json.
-    calls, starts = [], []
-    orig_apply = SingerEngine.apply_lines
-
-    def apply_lines(self, lines):
-        starts.append(len(calls))
-        orig_apply(self, lines)
-
-    with monkeypatch.context() as mp:
-        mp.setattr(SingerEngine, "apply_lines", apply_lines)
-        _tk_run(spark, tmp_path / "ref", mp, calls)
+    want, calls, starts = tk_ref
     assert len(starts) == len(_TK_LOG)
-    want = _lake_digest(spark, str(tmp_path / "ref" / "lake"))
     assert want["_state.json"] == {"pos": 2}
     first, last = starts[-1], len(calls) - 1
     assert calls[first:] == [["tk", "tk__tags"]]
@@ -225,12 +234,10 @@ def test_crash_in_last_batch_converges(spark, tmp_path, monkeypatch, when):
         assert os.listdir(root / "lake" / "_txn") == []
 
 
-def test_crash_in_vacuum_converges(spark, tmp_path, monkeypatch):
+def test_crash_in_vacuum_converges(spark, tmp_path, monkeypatch, tk_ref):
     # The last batch's commit vacuums each table it wrote. A crash right
     # after that vacuum's first os.remove leaves unreferenced files and the
     # batch unacknowledged; a restart must still converge.
-    _drive(spark, tmp_path / "ref", _TK_LOG)
-    want = _lake_digest(spark, str(tmp_path / "ref" / "lake"))
     root = tmp_path / "crash"
     tables = str(root / "lake" / "tables")
     calls, removed = [], []
@@ -254,16 +261,14 @@ def test_crash_in_vacuum_converges(spark, tmp_path, monkeypatch):
     # one commit per batch, and the crash fell inside the last one's vacuum
     assert calls == [["tk", "tk__tags"]] * len(_TK_LOG) and len(removed) == 1
     _drive(spark, root, _TK_LOG)
-    assert _lake_digest(spark, str(root / "lake")) == want
+    assert _lake_digest(spark, str(root / "lake")) == tk_ref[0]
 
 
 @pytest.mark.parametrize("when", ["before", "after"])
-def test_crash_around_seq_base_converges(spark, tmp_path, monkeypatch, when):
+def test_crash_around_seq_base_converges(spark, tmp_path, monkeypatch, tk_ref, when):
     # A plain log keeps each micro-batch's sequence base in seq_base.json.
     # A crash just before or just after the last batch's base is written
     # must converge on restart: the redelivered batch gets the same base.
-    _drive(spark, tmp_path / "ref", _TK_LOG)
-    want = _lake_digest(spark, str(tmp_path / "ref" / "lake"))
     last = len(_TK_LOG) - 1
     orig = StreamingDriver._seq_base_for
 
@@ -283,7 +288,7 @@ def test_crash_around_seq_base_converges(spark, tmp_path, monkeypatch, when):
     with open(root / "ckpt" / "seq_base.json") as fh:
         assert (str(last) in json.load(fh)) == (when == "after")
     _drive(spark, root, _TK_LOG)
-    assert _lake_digest(spark, str(root / "lake")) == want
+    assert _lake_digest(spark, str(root / "lake")) == tk_ref[0]
 
 
 def _unreplayed_crash(spark, cfg, monkeypatch, crashed, after_intent):
